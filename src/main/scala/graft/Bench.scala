@@ -8,6 +8,22 @@ import org.apache.spark.sql.SparkSession
   * Each query is fully materialized through the noop sink — a bare
   * `count()` would let Catalyst prune the projections and undercount the
   * real work.
+  *
+  * Output contract: stdout carries two lines, both with
+  * `"metric":"total"`; consumers tell them apart by their keys, and
+  * neither line is renamed or reshaped (round tooling parses both).
+  * {{{
+  *   {"metric":"total","value":<sec>,"unit":"sec","queries":{"<name>":<sec>,…},
+  *    "failed":["<name>",…],"sf":"<dir>"}
+  *   {"metric":"total","value":<sec>,"unit":"sec","n":<queries>,"nfailed":<k>,
+  *    "sf":"<dir>","cpus":<c>,"queries_file":"<path>"}
+  * }}}
+  * The first (full) line has the per-query map and is also written to
+  * `BENCH_SELF_<sf>_c<cpus>.json` and `BENCH_SELF.json`; the second
+  * (summary, under 200 chars) repeats the total, counts the queries and
+  * failures and names the file holding the full line, so a tail-limited
+  * capture that truncates the first line still parses. Both totals are
+  * the same sum of per-query seconds.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

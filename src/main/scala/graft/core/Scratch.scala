@@ -194,6 +194,8 @@ object Scratch {
     * the cache for the session's life pins executor memory and builds GC
     * pressure that taxes every LATER job in the session — the parquet
     * copy costs one small write and is re-readable at full parallelism.
+    * The read-back takes the schema of the frame just written, so it runs
+    * no footer-inference job.
     */
   def materialize(df: org.apache.spark.sql.DataFrame, kind: String,
       key: String): org.apache.spark.sql.DataFrame = {
@@ -201,6 +203,6 @@ object Scratch {
     df.write.mode("overwrite").parquet(p)
     invalidatePath(p)
     df.unpersist()
-    df.sparkSession.read.parquet(p)
+    df.sparkSession.read.schema(df.schema).parquet(p)
   }
 }

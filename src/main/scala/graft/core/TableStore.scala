@@ -3,9 +3,11 @@ package graft.core
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Logical table descriptor: the reference retrofitted primary keys onto
   * MySQL tables by name convention (/root/reference/tasks/backend/orm.py:113-298);
@@ -76,19 +78,38 @@ final case class TableSpec(
   *
   * == Scale design ==
   *
-  * For a partitioned table the merge only reads + rewrites the partitions
-  * present in the incoming batch (computed with one small distinct over
-  * the batch), so an incremental daily load against a 100 TB history
-  * touches one date partition, not the table. The merge itself is a single
-  * shuffle on the primary key (row_number keep-latest). When the partition
-  * columns are a subset of the primary key, a changed partition value
-  * implies a different key, so pruning is provably safe; otherwise a row's
-  * partition value may move between batches, and `upsert` additionally
-  * semi-joins incoming keys against the untouched partitions to pull the
-  * stale home of any moved key into the rewrite set (one broadcast
-  * semi-join scan — set `evictMovedKeys = false` to skip it when the
-  * pipeline guarantees partition values are immutable per key, as every
-  * reference table does).
+  * A commit pays only for the jobs its data needs:
+  *
+  *  - '''No schema inference for dirs the store wrote.''' A `b-*` dir
+  *    never changes after its write, so `writeBatch` records the data
+  *    schema it wrote (partition columns excluded) in a per-store map
+  *    keyed by the dir, and every read of that dir passes it to
+  *    `spark.read.schema(…)` instead of running a footer-inference job;
+  *    partition columns are still discovered from the paths. `gc` drops
+  *    an entry with its dir, so the map is bounded by the live dirs. The
+  *    adopted legacy `.` dir can change in place and dirs another store
+  *    instance wrote are unknown here; both are inferred on every read.
+  *  - '''Manifest-pruned merge read.''' For a partitioned table the merge
+  *    reads and rewrites only the manifest pairs whose partition path the
+  *    incoming batch touches (one small distinct over the batch), so an
+  *    incremental daily load against a 100 TB history reads one date
+  *    partition, not the table.
+  *  - '''One keep-latest window.''' In-batch duplicates and conflicts with
+  *    stored rows resolve in a single `row_number` over batch ∪ existing,
+  *    ordered by (priority, batch position). When the partition columns
+  *    are a subset of the primary key, one hash exchange on the partition
+  *    columns serves both the window and the writer, so the merge is one
+  *    shuffle; otherwise the window shuffles on the key and the writer
+  *    clusters on the partition columns.
+  *
+  * When the partition columns are a subset of the primary key, a changed
+  * partition value implies a different key, so pruning is provably safe;
+  * otherwise a row's partition value may move between batches, and
+  * `upsert` additionally semi-joins incoming keys against the untouched
+  * partitions to pull the stale home of any moved key into the rewrite
+  * set (one broadcast semi-join scan — set `evictMovedKeys = false` to
+  * skip it when the pipeline guarantees partition values are immutable
+  * per key, as every reference table does).
   */
 final class TableStore(spark: SparkSession, root: String) {
 
@@ -96,6 +117,20 @@ final class TableStore(spark: SparkSession, root: String) {
 
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Data schema (partition columns excluded) of every batch dir this
+    * store wrote and `gc` has not deleted, keyed `table/b-…`. */
+  private val batchSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def schemaKey(name: String, dir: String): String = s"$name/$dir"
+
+  /** Test seam: the batch dirs of table `name` with a recorded schema. */
+  private[graft] def recordedSchemaDirs(name: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    batchSchemas.keySet.asScala.collect {
+      case k if k.startsWith(s"$name/") => k.stripPrefix(s"$name/")
+    }.toSet
+  }
 
   // ── manifest machinery ────────────────────────────────────────────────
 
@@ -205,8 +240,10 @@ final class TableStore(spark: SparkSession, root: String) {
     val tableDir = new Path(path(name))
     f.listStatus(tableDir).foreach { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("b-") && !keep.contains(n))
+      if (st.isDirectory && n.startsWith("b-") && !keep.contains(n)) {
         f.delete(st.getPath, true)
+        batchSchemas.remove(schemaKey(name, n))
+      }
     }
     val mdir = manifestDir(name)
     f.listStatus(mdir).foreach { st =>
@@ -217,12 +254,12 @@ final class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** Write `df` as a fresh immutable batch dir; return its name and the
-    * partition dirs it contains (listed from disk, so the names are
-    * exactly what Spark's writer produced).
-    */
-  /** `clusterByPartition=false` is for callers (compact) that already
-    * repartitioned the frame to a deliberate file layout.
+  /** Write `df` as a fresh immutable batch dir, record its data schema
+    * in [[batchSchemas]], and return its name and the partition dirs it
+    * contains (listed from disk, so the names are exactly what Spark's
+    * writer produced). `clusterByPartition=false` is for callers that
+    * already partitioned the frame: compact's deliberate file layout, or
+    * a merge clustered on the partition columns.
     */
   private def writeBatch(f: FileSystem, spec: TableSpec, df: DataFrame,
       version: Long, clusterByPartition: Boolean = true): (String, Seq[String]) = {
@@ -241,6 +278,8 @@ final class TableStore(spark: SparkSession, root: String) {
     val w = sized.write.mode(SaveMode.Overwrite)
     (if (spec.partitionBy.nonEmpty) w.partitionBy(spec.partitionBy: _*) else w)
       .parquet(dest.toString)
+    batchSchemas.put(schemaKey(spec.name, dirName),
+      StructType(df.schema.filterNot(fl => spec.partitionBy.contains(fl.name))))
     val parts =
       if (spec.partitionBy.isEmpty) Seq("")
       else listPartDirs(f, dest, spec.partitionBy.size)
@@ -261,9 +300,12 @@ final class TableStore(spark: SparkSession, root: String) {
     val byDir = pairs.groupBy(_._1).toSeq.sortBy(_._1)
     val dfs = byDir.map { case (dir, ps) =>
       val abs = if (dir == ".") path(spec.name) else s"${path(spec.name)}/$dir"
+      // the legacy "." dir is never recorded, so it is always inferred
+      val reader = Option(batchSchemas.get(schemaKey(spec.name, dir)))
+        .fold(spark.read)(spark.read.schema)
       val parts = ps.map(_._2)
-      if (parts == Seq("")) spark.read.parquet(abs)
-      else spark.read.option("basePath", abs).parquet(parts.map(p => s"$abs/$p"): _*)
+      if (parts == Seq("")) reader.parquet(abs)
+      else reader.option("basePath", abs).parquet(parts.map(p => s"$abs/$p"): _*)
     }
     // allowMissingColumns: batch dirs written before a column was added
     // (see the schema-evolution contract on [[upsert]]) read as null.
@@ -415,70 +457,64 @@ final class TableStore(spark: SparkSession, root: String) {
     require(spec.primaryKey.nonEmpty, s"${spec.name}: upsert needs a primary key")
     val batch = conformToSchema(spec, batch0, "upsert")
     val f = fs
-    // Dedup within the batch first, honouring batch row order like the
-    // reference's sequential INSERT..ON DUPLICATE loop: last occurrence
-    // wins for upsert, first for INSERT IGNORE. monotonically_increasing_id
+    // Batch row order decides in-batch duplicates, like the reference's
+    // sequential INSERT..ON DUPLICATE loop: last occurrence wins for
+    // upsert, first for INSERT IGNORE. monotonically_increasing_id
     // encodes (partition, position) and is monotone in row order within
     // each partition — the strongest order a distributed batch has.
+    // Stored rows carry __seq = 0: the table holds one row per key.
     val seq = if (newWins) -monotonically_increasing_id() else monotonically_increasing_id()
-    val newDeduped = dedupByPk(
-      batch.withColumn("__prio", lit(if (newWins) 0 else 1)).withColumn("__seq", seq),
-      spec).drop("__seq")
+    val incoming = batch
+      .withColumn("__prio", lit(if (newWins) 0 else 1)).withColumn("__seq", seq)
     val cur = current(f, spec)
     if (cur.isEmpty) {
-      val (dir, parts) = writeBatch(f, spec, newDeduped.drop("__prio"), 1L)
+      val (dir, parts) = writeBatch(f, spec, keepLatest(spec, incoming), 1L,
+        clusterByPartition = !partitionsInKey(spec))
       val next = Manifest(1L, parts.map(dir -> _), props)
       commit(f, spec.name, 1L, next.pairs, next.props)
       gc(f, spec.name, next)
       return
     }
-    val existing0 = readPairs(spec, cur.get.pairs)
-      .withColumn("__prio", lit(if (newWins) 1 else 0))
-    // Partition pruning: only merge against partitions the batch touches.
-    val batchParts: Seq[Map[String, Any]] =
-      if (spec.partitionBy.isEmpty) Nil
-      else batch.select(spec.partitionBy.map(col): _*).distinct()
-        .collect().toSeq
-        .map(r => spec.partitionBy.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-    // Moved-key eviction (see scaladoc): partitions that still hold an old
-    // home of an incoming key join the rewrite set, so the keep-latest
-    // merge drops the stale row when the partition is rewritten.
-    val movedParts: Seq[Map[String, Any]] =
-      if (batchParts.isEmpty || !evictMovedKeys ||
-          spec.partitionBy.forall(spec.primaryKey.contains)) Nil
-      else {
-        val incomingKeys = newDeduped.select(spec.primaryKey.map(col): _*).distinct()
-        existing0.filter(!partitionPredicate(batchParts))
-          .join(broadcast(incomingKeys), spec.primaryKey, "left_semi")
-          .select(spec.partitionBy.map(col): _*).distinct()
-          .collect().toSeq
-          .map(r => spec.partitionBy.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-      }
-    val affected = batchParts ++ movedParts
-    val existing =
-      if (affected.isEmpty) existing0
-      else existing0.filter(partitionPredicate(affected))
+    // Every live dir, for the column check; the recorded batch schemas
+    // make building it cost no job.
+    val existingAll = readPairs(spec, cur.get.pairs)
     // Additive schema evolution (the vendor-adds-a-metric case the
     // reference handles with ALTER TABLE): a batch may introduce NEW
     // columns — rows from older batches read them as null. A batch
     // missing an existing column is rejected instead of silently
     // nulling it out on conflict (MySQL's column-level ON DUPLICATE
     // update keeps unprovided columns; whole-row replace would not).
-    val batchCols = batch.columns.filterNot(_ == "__prio").toSet
-    val missing = existing0.columns.filterNot(_ == "__prio").filterNot(batchCols)
+    val missing = existingAll.columns.filterNot(batch.columns.toSet)
     if (missing.nonEmpty)
       throw new IOException(
         s"TableStore: upsert batch for ${spec.name} lacks existing columns " +
         s"${missing.mkString(", ")}; select them (or null literals) explicitly")
-    val merged = dedupByPk(
-      newDeduped.unionByName(existing, allowMissingColumns = true),
-      spec
-    ).drop("__prio")
+    // Partition pruning: only merge against partitions the batch touches.
+    val batchParts = if (spec.partitionBy.isEmpty) Set.empty[String] else partitionPaths(spec, batch)
+    // Moved-key eviction (see scaladoc): partitions that still hold an old
+    // home of an incoming key join the rewrite set, so the keep-latest
+    // merge drops the stale row when the partition is rewritten.
+    val untouched = cur.get.pairs.filterNot { case (_, p) => batchParts.contains(p) }
+    val movedParts =
+      if (batchParts.isEmpty || !evictMovedKeys || partitionsInKey(spec) || untouched.isEmpty)
+        Set.empty[String]
+      else partitionPaths(spec, readPairs(spec, untouched)
+        .join(broadcast(batch.select(spec.primaryKey.map(col): _*)), spec.primaryKey, "left_semi"))
+    val affected = batchParts ++ movedParts
+    val mergePairs =
+      if (spec.partitionBy.isEmpty) cur.get.pairs
+      else cur.get.pairs.filter { case (_, p) => affected.contains(p) }
+    val candidates =
+      if (mergePairs.isEmpty) incoming
+      else incoming.unionByName(readPairs(spec, mergePairs)
+        .withColumn("__prio", lit(if (newWins) 1 else 0)).withColumn("__seq", lit(0L)),
+        allowMissingColumns = true)
     val version = cur.get.version + 1
-    val (dir, newParts) = writeBatch(f, spec, merged, version)
+    val (dir, newParts) = writeBatch(f, spec, keepLatest(spec, candidates), version,
+      clusterByPartition = !partitionsInKey(spec))
     val removed: Set[String] =
       if (spec.partitionBy.isEmpty) cur.get.pairs.map(_._2).toSet
-      else newParts.toSet ++ affected.map(partRelPath(spec, _)).toSet
+      else newParts.toSet ++ affected
     val next = Manifest(version,
       cur.get.pairs.filterNot { case (_, p) => removed.contains(p) } ++ newParts.map(dir -> _),
       cur.get.props ++ props)
@@ -591,26 +627,35 @@ final class TableStore(spark: SparkSession, root: String) {
     gc(f, spec.name, next, keepHistory = false)
   }
 
-  private def dedupByPk(df: DataFrame, spec: TableSpec): DataFrame = {
-    val ord =
-      if (df.columns.contains("__seq")) Seq(col("__prio").asc, col("__seq").asc)
-      else Seq(col("__prio").asc)
-    val w = Window.partitionBy(spec.primaryKey.map(col): _*).orderBy(ord: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  private def partitionsInKey(spec: TableSpec): Boolean =
+    spec.partitionBy.nonEmpty && spec.partitionBy.forall(spec.primaryKey.contains)
+
+  /** Keep, per primary key, the row with the lowest (__prio, __seq). When
+    * the partition columns are part of the key, hash-clustering on them
+    * satisfies both this window and the writer (whose caller then passes
+    * `clusterByPartition = false`), so the merge is one exchange.
+    */
+  private def keepLatest(spec: TableSpec, rows: DataFrame): DataFrame = {
+    val clustered =
+      if (partitionsInKey(spec))
+        rows.repartition(spark.sparkContext.defaultParallelism, spec.partitionBy.map(col): _*)
+      else rows
+    val w = Window.partitionBy(spec.primaryKey.map(col): _*)
+      .orderBy(col("__prio"), col("__seq"))
+    clustered.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .drop("__rn", "__prio", "__seq")
   }
 
-  private def partitionPredicate(affected: Seq[Map[String, Any]]): Column =
-    affected.map { m =>
-      m.map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _)
-    }.reduce(_ || _)
-
-  private def partRelPath(spec: TableSpec, m: Map[String, Any]): String =
-    spec.partitionBy.map(c => s"$c=${partDirValue(m(c))}").mkString("/")
-
-  private def partDirValue(v: Any): String = v match {
-    case null => "__HIVE_DEFAULT_PARTITION__"
-    case other => other.toString
-  }
+  /** The relative partition dirs of `df`'s rows, named as Spark's writer
+    * names them: each value cast to string (session time zone) and
+    * escaped, null or empty as the default partition name.
+    */
+  private def partitionPaths(spec: TableSpec, df: DataFrame): Set[String] =
+    df.select(spec.partitionBy.map(col(_).cast("string")): _*).distinct().collect()
+      .map(r => spec.partitionBy.zipWithIndex.map { case (c, i) =>
+        ExternalCatalogUtils.getPartitionPathString(c, r.getString(i))
+      }.mkString("/"))
+      .toSet
 
 }
 

@@ -2423,7 +2423,8 @@ object Dedup {
     * their verify step joined two ~KB string arrays onto every
     * candidate row (the same payload drag §1 measured on the MinHash
     * family). One column-pruned stats aggregate bounds the payload
-    * (string bytes + per-entry overhead ≤ 1 GiB, long ids); past the
+    * (per shingle: string bytes + 24 B string/array overhead + the 8 B
+    * FNV hash `SetsLookup` keeps beside it; ≤ 1 GiB, long ids); past the
     * bound the join form below stays. Memoized next to the sets table
     * so the collect runs once per (corpus, shingleLen) session-wide. */
   private val ppLookupMemo = new graft.core.BoundedMemo[String,
@@ -2435,7 +2436,7 @@ object Dedup {
           org.apache.spark.sql.types.LongType) None
       else {
         val st = sets.agg(
-          sum(expr("aggregate(transform(__sh, x -> length(x) + 24L)," +
+          sum(expr("aggregate(transform(__sh, x -> length(x) + 32L)," +
             " 0L, (a, x) -> a + x)"))).head()
         val bytes = if (st.isNullAt(0)) 0L else st.getLong(0)
         if (bytes > (1L << 30)) None

@@ -51,6 +51,12 @@ object TickBarStream {
     * (tasks/pytdx/stock_tick_2_bar.py + SURVEY §2.11). Late ticks within
     * the watermark re-emit their bar; the PK upsert makes the re-emit
     * (and any replay after failure) idempotent.
+    *
+    * Each epoch is evaluated once: the sink persists the batch, counts it
+    * (the one job that runs the stateful stage), and the upsert's
+    * partition collect, moved-key scan and merge all read the cache,
+    * which is released when the trigger ends. An empty epoch (the
+    * no-data trigger that follows each batch) commits no table version.
     */
   def upsertingSink(bars: DataFrame, store: graft.core.TableStore,
       spec: graft.core.TableSpec, queryName: String)
@@ -59,7 +65,9 @@ object TickBarStream {
       .outputMode("update")
       .queryName(queryName)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) store.upsert(spec, batch.toDF())
+        batch.persist()
+        try if (batch.count() > 0) store.upsert(spec, batch.toDF())
+        finally batch.unpersist(blocking = true)
       }
 
   /** Replay a parquet file through the streaming pipeline synchronously

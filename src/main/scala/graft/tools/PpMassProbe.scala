@@ -36,12 +36,7 @@ object PpMassProbe {
     val grams = sets.select(col("__id"), col("__n"),
       explode(col("__sh")).as("__g"))
     val dfc = grams.groupBy("__g").agg(count(lit(1)).as("__df"))
-    val pref = grams.join(dfc, "__g")
-      .filter(lit(1) === lit(1)) // rank-free approximation: prefix size
-      .withColumn("__pl", col("__n") - ceil(lit(tau) * col("__n") - lit(1e-9)) + 1)
-    // per-gram prefix posting count approximated by full df times
-    // avg(prefix/len); exact enough for shape decisions — but compute
-    // the EXACT prefix postings via the window for fidelity:
+    // exact per-gram prefix postings: rank each doc's grams by (df, gram)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__id").orderBy(col("__df"), col("__g"))
     val ranked = grams.join(dfc, "__g")
