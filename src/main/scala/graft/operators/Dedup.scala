@@ -1050,12 +1050,8 @@ object Dedup {
     // set instead of the candidate set. Pair set and every jaccard
     // value are bit-identical to the join form; the shuffle cost drops
     // from O(capped candidates) to O(reps · bands + verified pairs).
-    // `graft.mh.fusedTail=off` (test seam) forces the classic tail for
-    // differential pinning.
     val repPairs = (rs.lookup match {
-      case Some(bl) if sys.props.get("graft.mh.fusedTail")
-          .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-          .getOrElse("on") != "off" =>
+      case Some(bl) =>
         val width = numHashes
         val cutoff = estCutoff
         val tau = jaccardThreshold
@@ -1200,10 +1196,10 @@ object Dedup {
           }.toDF("id_a", "id_b", "jaccard")
           .dropDuplicates("id_a", "id_b")
       case _ =>
-        // Classic staged tail (kept verbatim as the over-bound
-        // fallback): est via sig joins or broadcast-lookup-free
-        // staging, distinct over est survivors, then the shingle-array
-        // verify join.
+        // Staged tail, the path when the rep tables exceed the lookup
+        // bounds or the ids are not long: est via sig joins or
+        // broadcast-lookup-free staging, distinct over est survivors,
+        // then the shingle-array verify join.
         val withSigs =
           if (sigsSmall) estFilter(candRaw).dropDuplicates("id_a", "id_b")
           else estFilter(candRaw.dropDuplicates("id_a", "id_b"))
@@ -2484,83 +2480,13 @@ object Dedup {
     // alpha = ceil(tau/(1+tau) · (na+nb)). The FIRST shared shingle of
     // any true pair satisfies the bound (all its overlap sits at
     // positions >= ra / >= rb), so per-row pruning never drops a pair.
-    //
-    // Fused posting-list enumeration (r17): the per-gram self-join
-    // materialized every enumerated row BEFORE the filters ran —
-    // measured at sf0.1, 125.9 M rows enumerated for 46.6 M filter
-    // survivors and 7.9 M distinct candidates. Prefix postings are
-    // instead grouped per gram and the i<j loop + ALL filters run in
-    // one iterator (identical double arithmetic: Spark's
-    // ceil(x − 1e-9) over DoubleType is (long) Math.ceil, replicated
-    // verbatim), so rejected enumerations never become rows. Chunked +
-    // repartitioned like the MinHash tail (bytes are a bad proxy for
-    // C(c,2) work under AQE coalescing). Gated on a long id column;
-    // anything else keeps the join form.
-    val fusedOn = sys.props.get("graft.mh.fusedTail")
-      .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-      .getOrElse("on") != "off" &&
-      sets.schema("__id").dataType == org.apache.spark.sql.types.LongType
-    val candidates = if (fusedOn) {
-      val chunkPairs = 1L << 17
-      val sz = size(col("__ps")).cast("long")
-      val postings = prefixes
-        .select(col("__g"), struct(col("__id").as("_1"),
-          col("__n").as("_2"), col("__rk").as("_3")).as("__p"))
-        .groupBy(col("__g")).agg(collect_list(col("__p")).as("__ps"))
-        .filter(size(col("__ps")) >= 2)
-        .select(col("__ps"),
-          greatest(lit(1L),
-            (sz * (sz - 1L) / 2L + (chunkPairs - 1L)) / chunkPairs)
-            .cast("int").as("__nc"))
-        .select(col("__ps"), col("__nc"),
-          explode(sequence(lit(0), col("__nc") - 1)).as("__c"))
-        .toDF("_1", "_2", "_3")
-      val sess = postings.sparkSession
-      import sess.implicits._
-      val tt = tau / (1.0 + tau)
-      postings
-        .repartition(sess.sparkContext.defaultParallelism)
-        .as[(Array[(Long, Int, Int)], Int, Int)]
-        .flatMap { case (raw, nc, c) =>
-          val ps = raw.sortBy(_._1) // ascending id: i<j gives id_a < id_b
-          val m = ps.length
-          new scala.collection.AbstractIterator[(Long, Long)] {
-            private var i = c - nc
-            private var j = m
-            private var nxt: (Long, Long) = _
-            private var has = false
-            advance()
-            private def advance(): Unit = {
-              has = false
-              while (!has && i < m - 1) {
-                j += 1
-                if (j >= m) { i += nc; j = i + 1 }
-                if (i < m - 1 && j < m) {
-                  val (ia, na, ra) = ps(i)
-                  val (ib, nb, rb) = ps(j)
-                  // same predicates as the Column form, same doubles
-                  if (nb >= math.ceil(tau * na - 1e-9).toLong &&
-                      nb * tau <= na + 1e-9 &&
-                      1L + math.min(na - ra, nb - rb) >=
-                        math.ceil(tt * (na + nb) - 1e-9).toLong) {
-                    nxt = (ia, ib); has = true
-                  }
-                }
-              }
-            }
-            def hasNext: Boolean = has
-            def next(): (Long, Long) = { val r = nxt; advance(); r }
-          }
-        }.toDF("id_a", "id_b").distinct()
-    } else {
-      val alpha = ceilSlack(lit(tau / (1.0 + tau)) * (col("na") + col("nb")))
-      pa.join(pb, Seq("__g"))
-        .filter(col("id_b") > col("id_a") &&
-          col("nb") >= ceilSlack(lit(tau) * col("na")) &&
-          col("nb") * tau <= col("na") + lit(1e-9) &&
-          lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >= alpha)
-        .select("id_a", "id_b").distinct()
-    }
+    val alpha = ceilSlack(lit(tau / (1.0 + tau)) * (col("na") + col("nb")))
+    val candidates = pa.join(pb, Seq("__g"))
+      .filter(col("id_b") > col("id_a") &&
+        col("nb") >= ceilSlack(lit(tau) * col("na")) &&
+        col("nb") * tau <= col("na") + lit(1e-9) &&
+        lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >= alpha)
+      .select("id_a", "id_b").distinct()
     // Exact verification: candidates only. Candidate-local when the
     // sets table fits the broadcast-lookup bound (the join form
     // materialized two ~KB string arrays per candidate row); the probe
@@ -2649,75 +2575,11 @@ object Dedup {
     // ceil(tau·|A|); a shared shingle at (ra, rb) caps it at
     // 1 + min(na − ra, nb − rb). The first shared shingle of a true
     // pair meets the cap, so per-row pruning is sound.
-    //
-    // Fused posting-list enumeration (r17), the asymmetric twin of
-    // [[prefixFilterPairsRaw]]'s: per gram, the A-side prefix postings
-    // and the B-side full postings are collected into ONE tagged list
-    // and the A×B loop + filters run in an iterator, chunked by
-    // striding the A index. Same arithmetic, same emitted pair set.
-    val fusedOn = sys.props.get("graft.mh.fusedTail")
-      .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-      .getOrElse("on") != "off" &&
-      sets.schema("__id").dataType == org.apache.spark.sql.types.LongType
-    val candidates = if (fusedOn) {
-      val chunkPairs = 1L << 17
-      val tagged = prefixes.select(col("__g"), struct(lit(0).as("_1"),
-          col("id_a").as("_2"), col("na").as("_3"), col("ra").as("_4")).as("__p"))
-        .unionByName(full.select(col("__g"), struct(lit(1).as("_1"),
-          col("id_b").as("_2"), col("nb").as("_3"), col("rb").as("_4")).as("__p")))
-      val na0 = size(filter(col("__ps"), p => p.getField("_1") === 0)).cast("long")
-      val nb0 = size(col("__ps")).cast("long") - na0
-      val postings = tagged
-        .groupBy(col("__g")).agg(collect_list(col("__p")).as("__ps"))
-        .select(col("__ps"),
-          greatest(lit(1L), (na0 * nb0 + (chunkPairs - 1L)) / chunkPairs)
-            .cast("int").as("__nc"))
-        .select(col("__ps"), col("__nc"),
-          explode(sequence(lit(0), col("__nc") - 1)).as("__c"))
-        .toDF("_1", "_2", "_3")
-      val sess = postings.sparkSession
-      import sess.implicits._
-      postings
-        .repartition(sess.sparkContext.defaultParallelism)
-        .as[(Array[(Int, Long, Int, Int)], Int, Int)]
-        .flatMap { case (raw, nc, c) =>
-          val as = raw.filter(_._1 == 0)
-          val bs = raw.filter(_._1 == 1)
-          val ma = as.length; val mb = bs.length
-          new scala.collection.AbstractIterator[(Long, Long)] {
-            private var i = c - nc
-            private var j = mb
-            private var nxt: (Long, Long) = _
-            private var has = false
-            advance()
-            private def advance(): Unit = {
-              has = false
-              while (!has && i < ma) {
-                j += 1
-                if (j >= mb) { i += nc; j = 0 }
-                if (i < ma && j < mb) {
-                  val (_, ia, na, ra) = as(i)
-                  val (_, ib, nb, rb) = bs(j)
-                  // same predicates as the Column form, same doubles
-                  if (ia != ib && na <= nb &&
-                      1L + math.min(na - ra, nb - rb) >=
-                        math.ceil(tau * na - 1e-9).toLong) {
-                    nxt = (ia, ib); has = true
-                  }
-                }
-              }
-            }
-            def hasNext: Boolean = has
-            def next(): (Long, Long) = { val r = nxt; advance(); r }
-          }
-        }.toDF("id_a", "id_b").distinct()
-    } else {
-      prefixes.join(full, Seq("__g"))
-        .filter(col("id_a") =!= col("id_b") && col("na") <= col("nb") &&
-          lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >=
-            ceilSlack(lit(tau) * col("na")))
-        .select("id_a", "id_b").distinct()
-    }
+    val candidates = prefixes.join(full, Seq("__g"))
+      .filter(col("id_a") =!= col("id_b") && col("na") <= col("nb") &&
+        lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >=
+          ceilSlack(lit(tau) * col("na")))
+      .select("id_a", "id_b").distinct()
     // Candidate-local verify under the same lookup bound; the probe's
     // |A∩B| count over the (already-distinct) shingle sets equals
     // size(array_intersect(A, B)) exactly ([[SetsLookup.interCount]] —

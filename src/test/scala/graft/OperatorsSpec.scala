@@ -272,29 +272,27 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       words.zipWithIndex.map { case (w, i) =>
         if (i % 8 < k) s"mut$k$i" else w }.mkString(" ")
     }
-    val docs = ((1L to 5L).map(i => (i, base)) ++
+    val corpus = (1L to 5L).map(i => (i, base)) ++
       mutated.zipWithIndex.map { case (t, k) => (10L + k, t) } ++
       (30L to 60L).map(i =>
-        (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
-      .toDF("doc_id", "text")
+        (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j"))
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
+      df.collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val fused = rows(Dedup.minHashDupPairs(docs, "doc_id", "text",
-      shingleLen = 3, numHashes = 16, bands = 8, jaccardThreshold = 0.35,
-      maxBucketSize = 50))
-    val classic = try {
-      sys.props("graft.mh.fusedTail") = "off"
+    def pairs(docs: org.apache.spark.sql.DataFrame) =
       rows(Dedup.minHashDupPairs(docs, "doc_id", "text",
         shingleLen = 3, numHashes = 16, bands = 8, jaccardThreshold = 0.35,
         maxBucketSize = 50))
-    } finally sys.props.remove("graft.mh.fusedTail")
-    assert(fused.nonEmpty && fused == classic,
-      s"fused=${fused.size} classic=${classic.size} " +
-        s"diff=${(fused diff classic) ++ (classic diff fused)}")
+    // Long ids take the broadcast rep lookup (fused tail); the same
+    // corpus keyed by Int ids has no lookup and runs the staged tail.
+    val fused = pairs(corpus.toDF("doc_id", "text"))
+    val staged = pairs(corpus.map { case (i, t) => (i.toInt, t) }.toDF("doc_id", "text"))
+    assert(fused.nonEmpty && fused == staged,
+      s"fused=${fused.size} staged=${staged.size} " +
+        s"diff=${(fused diff staged) ++ (staged diff fused)}")
   }
 
-  test("fused PPJoin posting enumeration is bit-identical to the join form") {
+  test("PPJoin and containment pairs are bit-identical to a brute-force reference") {
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi rho sigma"
     val words = base.split(" ")
@@ -303,28 +301,45 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         if (i % 10 < k) s"mm$k$i" else w }.mkString(" ")
     }
     // a short doc embedded in a longer one (containment shape) + noise
-    val docs = ((1L to 4L).map(i => (i, base)) ++
+    val corpus = (1L to 4L).map(i => (i, base)) ++
       mutated.zipWithIndex.map { case (t, k) => (10L + k, t) } ++
       Seq((30L, words.take(6).mkString(" ")),
         (31L, base + " extra tail words here now")) ++
       (40L to 70L).map(i =>
-        (i, s"aa${i}x bb${i}y cc${i}z dd${i}w ee${i}v ff${i}u gg${i}t")))
-      .toDF("doc_id", "text")
+        (i, s"aa${i}x bb${i}y cc${i}z dd${i}w ee${i}v ff${i}u gg${i}t"))
+    // Reference: word 2-gram sets in plain Scala, every pair scored.
+    val sets = corpus.map { case (i, t) =>
+      i -> t.toLowerCase.split("\\s+").filter(_.nonEmpty)
+        .sliding(2).map(_.mkString(" ")).toSet
+    }
+    def bits(a: Long, b: Long, v: Double) =
+      (a, b, java.lang.Double.doubleToLongBits(v))
+    def bruteJaccard(tau: Double) = (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      j = (sa & sb).size.toDouble / (sa | sb).size if j >= tau
+    } yield bits(a, b, j)).toSet
+    def bruteContainment(tau: Double) = (for {
+      (a, sa) <- sets; (b, sb) <- sets if a != b && sa.size <= sb.size
+      c = (sa & sb).size.toDouble / sa.size if c >= tau
+    } yield bits(a, b, c)).toSet
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    for (tau <- Seq(0.3, 0.5)) {
-      val fusedJ = rows(Dedup.prefixFilterPairs(docs, "doc_id", "text", 2, tau))
-      val fusedC = rows(Dedup.containmentPairs(docs, "doc_id", "text", 2, tau))
-      val (classicJ, classicC) = try {
-        sys.props("graft.mh.fusedTail") = "off"
-        (rows(Dedup.prefixFilterPairs(docs, "doc_id", "text", 2, tau)),
-          rows(Dedup.containmentPairs(docs, "doc_id", "text", 2, tau)))
-      } finally sys.props.remove("graft.mh.fusedTail")
-      assert(fusedJ.nonEmpty && fusedJ == classicJ,
-        s"tau=$tau jaccard diff=${(fusedJ diff classicJ) ++ (classicJ diff fusedJ)}")
-      assert(fusedC.nonEmpty && fusedC == classicC,
-        s"tau=$tau containment diff=${(fusedC diff classicC) ++ (classicC diff fusedC)}")
+      df.collect().map(r => bits(r.getAs[Number](0).longValue,
+        r.getAs[Number](1).longValue, r.getDouble(2))).toSet
+    // Long ids verify through the broadcast SetsLookup; Int ids have no
+    // lookup, so the same corpus verifies through the join form
+    // (jaccardOfSets / array_intersect).
+    val keyings = Seq(
+      "long ids" -> corpus.toDF("doc_id", "text"),
+      "int ids" -> corpus.map { case (i, t) => (i.toInt, t) }.toDF("doc_id", "text"))
+    for (tau <- Seq(0.3, 0.5); (keying, docs) <- keyings) {
+      val wantJ = bruteJaccard(tau)
+      val wantC = bruteContainment(tau)
+      val gotJ = rows(Dedup.prefixFilterPairs(docs, "doc_id", "text", 2, tau))
+      val gotC = rows(Dedup.containmentPairs(docs, "doc_id", "text", 2, tau))
+      assert(wantJ.nonEmpty && gotJ == wantJ,
+        s"tau=$tau $keying jaccard diff=${(gotJ diff wantJ) ++ (wantJ diff gotJ)}")
+      assert(wantC.nonEmpty && gotC == wantC,
+        s"tau=$tau $keying containment diff=${(gotC diff wantC) ++ (wantC diff gotC)}")
     }
   }
 
