@@ -34,20 +34,29 @@ object Bench {
         SparkSession.builder().master(s"local[$cpus]"), cpus.toInt
       ).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup on the smallest SF so per-query numbers measure
-    // the plan, not JIT.
+    // Warm-up on the smallest SF: loads the JVM's and Spark's classes,
+    // starts the JIT on the planner and the scan path, and leaves the
+    // generated classes of a1_pricing_summary's own plan in the codegen
+    // cache (sized in GraftSession, so they survive the board). Every
+    // other query still generates and compiles its own classes on its
+    // first run; the `codegen: compiles=` line below counts them.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => }
     // Optional comma-separated filter for iterating on one query's plan.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Dev-only: time each query N times and report the fastest, to
     // separate JIT/codegen warmup from real plan cost. The driver never
-    // sets this, so its numbers stay single-shot (default 1).
+    // sets this, so its numbers stay single-shot (default 1). Repeats
+    // 2..N reuse the session's memos and Scratch fixtures and the
+    // query's generated classes, so the min-of-N is a WARM figure; the
+    // first repeat (printed first on the `runs:` line) is the cold one.
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt).getOrElse(1)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val results = selected.map { case (name, fn) =>
       var ok = true
+      val compiles0 = compiles.getCount
       val times = (0 until repeat).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -64,6 +73,9 @@ object Bench {
       // mid-run (wall-clock budget, wedged query) used to lose EVERY
       // completed measurement because the JSON only prints at the end.
       System.err.println(f"[bench] $name%s done: $elapsed%.3f s")
+      // Janino compilations the query paid for (all repeats): a class
+      // already in the codegen cache costs none.
+      System.err.println(s"[bench] $name codegen: compiles=${compiles.getCount - compiles0}")
       // Hermetic per-query timing: release anything the query left behind
       // (cached plans, streaming memory-sink views) and let the JVM
       // settle, so query N+1 measures its own plan, not query N's

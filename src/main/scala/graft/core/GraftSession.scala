@@ -38,6 +38,7 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         graft.core.Scratch.queryDir("warehouse"))
       .config("spark.ui.enabled", "false")
@@ -58,6 +59,30 @@ object GraftSession {
       // (graft.plans.AsOfJoinPlan). registerFunctions also injects it
       // via experimental.extraStrategies for already-built sessions.
       .withExtensions(e => e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy))
+
+  /** Entries in Spark's generated-code cache (`spark.sql.codegen.cache.
+    * maxEntries`, default 100): the compiled whole-stage, projection and
+    * predicate classes, keyed by their source text, in ONE LRU shared by
+    * the whole JVM. It is a static conf because the cache is built, at
+    * this size, when the first class is generated; setting it on a live
+    * session does nothing, so it belongs to the builder, and every entry
+    * point (Bench, Verify, the tools, the tests' shared session, the
+    * perfbench workloads) builds its session here.
+    *
+    * The engine reruns the same plan shapes on fresh data, so its
+    * working set is the distinct classes of one run, not of one query.
+    * Counted with the cap lifted: a perfbench corpus_dedup run generates
+    * 180 distinct classes (188 after 7 ops), futures_eod 135 (flat from
+    * 3 to 7 ops), tick_bars 104-122, and one pass of the 199-query
+    * board at sf0.01 compiles 3,497 (the sum of Bench's per-query
+    * `codegen: compiles=` lines; e2e_corpus_curation alone 156). An LRU
+    * cycling through more entries than it holds misses on every lookup,
+    * so at 100 each op regenerated and re-JITted the classes the last
+    * op had just compiled. 4096 holds the whole board with ~17%
+    * headroom. Each live entry pins ~33 KB of source text plus
+    * bytecode, so a full cache is ~135 MB of heap; a perfbench run
+    * keeps under 200 entries live (+2.8 MB on corpus_dedup). */
+  private val codegenCacheEntries = 4096
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)

@@ -573,11 +573,16 @@ object Dedup {
     * bucket size, so the collect is bounded like the calibration
     * histograms. */
   private def bucketHistogram(banded0: DataFrame): Array[(Long, Long)] =
-    banded0.groupBy(col("band"), col("band_hash"))
+    sortedHist(banded0.groupBy(col("band"), col("band_hash"))
       .agg(count(lit(1)).as("__n"))
-      .groupBy(col("__n")).agg(count(lit(1)).as("__m"))
-      .orderBy(col("__n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(col("__n")).agg(count(lit(1)).as("__m")))
+
+  /** Collect a model-sized `(__n, __m)` histogram, one row per distinct
+    * `__n`, and sort it ascending by `__n` on the driver. The keys are
+    * distinct, so this is the array a global `orderBy` would give,
+    * without its range-partition exchange and sampling job. */
+  private def sortedHist(hist: DataFrame): Array[(Long, Long)] =
+    hist.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
 
   /** Σ C(bucket, 2) over the cap-surviving buckets — the exact
     * bucket-self-join row count the budget check bounds. Integer `div`,
@@ -769,9 +774,17 @@ object Dedup {
     * than persist()-pinned so a session-long cache costs disk, not
     * executor memory — this is the single-node shape of the 100 TB
     * discipline where the signature table is a PERSISTED corpus asset
-    * computed once per ingest, not per query. */
+    * computed once per ingest, not per query. Bounded LRU like
+    * [[bandHistMemo]]: a shard-per-call caller (a crawl ingest) adds one
+    * corpus per call, and an evicted entry is rebuilt on its next use. */
   private val repSpaceMemo =
-    scala.collection.mutable.Map[String, (Int, RepSpace)]()
+    new graft.core.BoundedMemo[String, (Int, RepSpace)](16)
+
+  /** Signature widths of the memoized rep spaces, least recently used
+    * first (test seam). */
+  private[graft] def repSpaceWidths: Seq[Int] = synchronized {
+    repSpaceMemo.keysInAccessOrder.flatMap(repSpaceMemo.get).map(_._1)
+  }
 
   /** Model-sized banding histograms, memoized per (rep space, band
     * shape): the (bucket size, count) histogram — and the incremental
@@ -934,7 +947,7 @@ object Dedup {
     reps.unpersist()
     withNorm.unpersist()
     val rs = RepSpace(members, perDoc, nReps, shingleBytes, numHashes)
-    repSpaceMemo(memoKey) = (numHashes, rs)
+    repSpaceMemo.put(memoKey, (numHashes, rs))
     rs
   }
 
@@ -1615,11 +1628,9 @@ object Dedup {
         // runs once per (index, batch, shape), not once per budget
         val hits = massHistMemo.getOrElseUpdate(
           (iRs, bRs, numHashes, bands, gapCap),
-          newBand.select(col("band"), col("band_hash"))
+          sortedHist(newBand.select(col("band"), col("band_hash"))
             .join(bucketN, Seq("band", "band_hash"))
-            .groupBy(col("__n")).agg(count(lit(1)).as("__m"))
-            .orderBy(col("__n")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))))
+            .groupBy(col("__n")).agg(count(lit(1)).as("__m"))))
         math.min(gapCap.toLong,
           budgetCapFromMassHist(hits, budget * nBatchReps).toLong).toInt
     }
