@@ -41,12 +41,14 @@ import scala.collection.mutable
   *    diverge when a cold-started scan overshoots the true main's
   *    maturity and nothing forces re-coupling before the slice starts.
   *    The differential is pinned in ContinuousFuturesSpec against the
-  *    retained whole-bar legacy scan.
+  *    whole-bar legacy scan kept in the test sources.
   *
-  * The factor scan (D2/D3) stays whole-type in phase 2 — its output is
-  * sparse (one row per roll) and its reverse cumulation spans the whole
-  * history — but consumes the phase-1 reduction, so its serial chain is
-  * also O(candidate entries), not O(raw bars).
+  * D2 replays the factor scan per slice the same way. D3 runs the
+  * factor scan whole-type over the phase-1 reduction, so its serial
+  * chain is O(candidate entries), not O(raw bars), and emits the
+  * adjusted series in the same pass: the reduced day row already holds
+  * every contract's close, so the series needs no join back to the bars
+  * and no as-of join of the factors.
   *
   * Contract maturity is taken from the candidate row at selection time
   * (the data model has one expiry per contract, so this matches the
@@ -54,14 +56,6 @@ import scala.collection.mutable
   * across rows* would be malformed input either way).
   */
 object ContinuousFutures {
-
-  /** Internal scan row for the retained legacy scan: dates as epoch-day
-    * ints, not `java.sql.Date` — the group scan decodes every bar row of
-    * its group on one thread, and Date conversions dominate that decode.
-    */
-  case class Bar(instrument_type: String, instrument_id: String,
-      trade_date: Int, close: Option[Double],
-      switch_by: Option[Double], last_trade_date: Int)
 
   /** Output rows use nullable `String` (null = no secondary), not
     * `Option[String]`: the Option accessor defeats Janino compilation of
@@ -76,6 +70,13 @@ object ContinuousFutures {
       instrument_id_main: String, adj_factor_main: Double,
       instrument_id_secondary: String, adj_factor_secondary: Double)
 
+  /** One row of the continuous series. The doubles are boxed: a main
+    * contract's bar with a null close still gives a row, with `close`
+    * and `close_adj` null. */
+  case class SeriesRow(instrument_type: String, trade_date: java.sql.Date,
+      main_id: String, close: java.lang.Double, adj_factor_main: java.lang.Double,
+      close_adj: java.lang.Double)
+
   sealed trait Method { def neutral: Double }
   case object Division extends Method { val neutral = 1.0 }
   case object Diff extends Method { val neutral = 0.0 }
@@ -86,10 +87,13 @@ object ContinuousFutures {
     * phase-1 `sort_array` orders candidates by (maturity, id) exactly
     * like the legacy per-day `sortBy`. */
   case class Cand(maturity: Int, id: String, sw: Double)
-  case class CloseE(id: String, close: Double)
+  /** One bar row's close; null when the bar has none. The series emits
+    * it as is; the factor scans skip it (see [[closeMap]]). */
+  case class CloseE(id: String, close: java.lang.Double)
   /** Per-(type, day) reduction for the selection path (no closes). */
   case class DaySel(instrument_type: String, trade_date: Int, cands: Seq[Cand])
-  /** Per-(type, day) reduction for the factor path. */
+  /** Per-(type, day) reduction for the factor path and the series:
+    * `closes` holds one entry per bar row, null closes included. */
   case class DayFull(instrument_type: String, trade_date: Int,
       cands: Seq[Cand], closes: Seq[CloseE])
   /** Exact selection state at the first day of `slice` (before that
@@ -208,12 +212,11 @@ object ContinuousFutures {
       .agg(candAgg).as[DaySel]
   }
 
-  private def reduceFull(spark: SparkSession, bars: DataFrame): Dataset[DayFull] = {
+  private[graft] def reduceFull(spark: SparkSession, bars: DataFrame): Dataset[DayFull] = {
     import spark.implicits._
     barCols(bars).groupBy(col("instrument_type"), col("trade_date"))
-      .agg(candAgg,
-        collect_list(when(col("close").isNotNull,
-          struct(col("id"), col("close")))).as("closes")).as[DayFull]
+      .agg(candAgg, collect_list(struct(col("id"), col("close"))).as("closes"))
+      .as[DayFull]
   }
 
   /** ONE shared phase-1 reduction serves the whole d-family (round 11):
@@ -293,14 +296,20 @@ object ContinuousFutures {
 
   // ── D2/D3: whole-type factor scan over the phase-1 reduction ────────
 
-  /** Run the per-type scan over reduced day rows, producing (daily
-    * selections, factor rows). Sequential per type by definition (the
+  /** A day's closes by contract id, for pricing a roll. Null closes
+    * quote nothing: a roll needs both contracts' closes. */
+  private def closeMap(closes: Seq[CloseE]): Map[String, Double] =
+    closes.iterator.filter(_.close != null).map(c => c.id -> c.close.doubleValue).toMap
+
+  /** Run the per-type scan over reduced day rows, producing (each
+    * candidate-bearing day with its main contract, factor rows by
+    * epoch day, date-ascending). Sequential per type by definition (the
     * reverse factor cumulation spans the whole history), but every
     * per-bar cost was already paid distributed in phase 1. */
-  private def scanReduced(instrumentType: String, days: Iterator[DayFull],
-      method: Method): (Seq[Selection], Seq[FactorRow]) = {
+  private[graft] def scanReduced(instrumentType: String, days: Iterator[DayFull],
+      method: Method): (Seq[(DayFull, String)], Seq[(Int, FactorRow)]) = {
     val st = new SelState
-    val selections = mutable.ArrayBuffer[Selection]()
+    val selections = mutable.ArrayBuffer[(DayFull, String)]()
     val factors = mutable.ArrayBuffer[(Int, String, Option[Double], Option[String], Option[Double])]()
     var prevDate = Int.MinValue
     var prevCloses: Map[String, Double] = Map.empty
@@ -336,11 +345,10 @@ object ContinuousFutures {
         }
       }
       prevDate = day.trade_date
-      prevCloses = day.closes.map(c => c.id -> c.close).toMap
+      prevCloses = closeMap(day.closes)
       lastDate = day.trade_date
       lastSeen = true
-      if (st.main != null)
-        selections += Selection(instrumentType, toSqlDate(day.trade_date), st.main, st.sec)
+      if (st.main != null) selections += ((day, st.main))
     }
     // latest date carries the neutral factor
     val lastRows: Seq[(Int, String, Option[Double], Option[String], Option[Double])] =
@@ -353,7 +361,6 @@ object ContinuousFutures {
       .sortBy(-_._1)
     var accM = method.neutral
     var accS = method.neutral
-    var lastMainId: Option[String] = None
     var lastSecId: Option[String] = None
     val out = raw.map { case (d, mainId, fM, secId, fS) =>
       accM = method match {
@@ -364,10 +371,9 @@ object ContinuousFutures {
         case Division => accS * fS.getOrElse(1.0)
         case Diff => accS + fS.getOrElse(0.0)
       }
-      lastMainId = Some(mainId)
       lastSecId = secId.orElse(lastSecId)
       (d, FactorRow(instrumentType, toSqlDate(d), mainId, accM, lastSecId.orNull, accS))
-    }.sortBy(_._1).map(_._2)
+    }.sortBy(_._1)
     (selections.toSeq, out.toSeq)
   }
 
@@ -399,8 +405,7 @@ object ContinuousFutures {
     *
     * Replay from the true boundary state equals the whole-type scan by
     * construction (the same transition function resumed mid-stream);
-    * [[adjFactorsSerial]] is retained as the differential oracle
-    * (ContinuousFuturesSpec pins equality).
+    * ContinuousFuturesSpec pins equality against the whole-type scan.
     */
   def adjFactors(spark: SparkSession, bars: DataFrame, method: Method = Division): DataFrame = {
     import spark.implicits._
@@ -415,16 +420,6 @@ object ContinuousFutures {
       .flatMapGroups((t, it) => cumulateEvents(t, it.toSeq, method).iterator)(
         Encoders.product[FactorRow])
       .toDF()
-  }
-
-  // phase-timing probe hooks (graft.tools.D2Profile)
-  private[graft] def probeReduce(spark: SparkSession, bars: DataFrame): Long =
-    reducedDayFull(spark, bars).count()
-  private[graft] def probeSeeds(spark: SparkSession, bars: DataFrame): Long =
-    facSeeds(spark, reducedDayFull(spark, bars)).count()
-  private[graft] def probeEvents(spark: SparkSession, bars: DataFrame): Long = {
-    val reduced = reducedDayFull(spark, bars)
-    facEvents(spark, reduced, facSeeds(spark, reduced), Diff).count()
   }
 
   /** 2a: exact boundary states + end sentinel, one compact pass/type. */
@@ -480,7 +475,7 @@ object ContinuousFutures {
           st.main = s.main; st.mainMat = s.mainMat
           st.sec = s.sec; st.secMat = s.secMat
           prevDate = s.prevDate
-          prevCloses = s.prevCloses.map(c => c.id -> c.close).toMap
+          prevCloses = closeMap(s.prevCloses)
         }
         val out = mutable.ArrayBuffer[FacEvent]()
         for (day <- days; if day.cands.nonEmpty) {
@@ -507,7 +502,7 @@ object ContinuousFutures {
             }
           }
           prevDate = day.trade_date
-          prevCloses = day.closes.map(c => c.id -> c.close).toMap
+          prevCloses = closeMap(day.closes)
         }
         out.iterator
         }
@@ -562,229 +557,67 @@ object ContinuousFutures {
     }
   }
 
-  /** The round-10 whole-type serial factor scan — retained ONLY as the
-    * differential oracle for the sliced [[adjFactors]]
-    * (ContinuousFuturesSpec pins equality on every SF fixture). */
-  private[graft] def adjFactorsSerial(spark: SparkSession, bars: DataFrame,
-      method: Method = Division): DataFrame = {
-    import spark.implicits._
-    reduceFull(spark, bars).groupByKey(_.instrument_type)
-      .flatMapSortedGroups(col("trade_date")) { (t, it) =>
-        scanReduced(t, it, method)._2.iterator
-      }(Encoders.product[FactorRow])
-      .toDF()
+  /** The continuous series of one type from its scan: for each
+    * selected day, one row per bar row of the main contract (duplicate
+    * bars give duplicate rows, a null close stays null), with the
+    * earliest factor dated on or after the day, since a factor covers
+    * every day up to its roll date. `close_adj` is the same double op the
+    * join form ran: `close + adj` or `close * adj`, with the neutral
+    * factor where no factor follows the day. */
+  private def emitSeries(mains: Seq[(DayFull, String)], facs: Seq[(Int, FactorRow)],
+      method: Method): Iterator[SeriesRow] = {
+    val ahead = facs.iterator.buffered
+    val out = mutable.ArrayBuffer[SeriesRow]()
+    for ((day, main) <- mains) {
+      while (ahead.hasNext && ahead.head._1 < day.trade_date) ahead.next()
+      val adj: java.lang.Double = if (ahead.hasNext) ahead.head._2.adj_factor_main else null
+      val factor = if (adj == null) method.neutral else adj.doubleValue
+      val date = toSqlDate(day.trade_date)
+      for (c <- day.closes; if c.id == main) {
+        val closeAdj: java.lang.Double =
+          if (c.close == null) null
+          else method match {
+            case Division => c.close.doubleValue * factor
+            case Diff => c.close.doubleValue + factor
+          }
+        out += SeriesRow(day.instrument_type, date, main, c.close, adj, closeAdj)
+      }
+    }
+    out.iterator
   }
 
-  /** One scan pass emitting selections (kind=0) and factor rows (kind=1)
-    * together — `continuousSeries` needs both, and running the per-type
-    * scan once halves its cost.
-    *
-    * Public, not `private`: Janino's generated `UnsafeProjection` lives
-    * outside this package, and scalac emits a private nested case class
-    * as package-private bytecode — codegen then can't invoke the
-    * accessors and every row falls back to interpreter-mode projection.
-    */
-  case class ScanOut(kind: Int, instrument_type: String,
-      trade_date: java.sql.Date, main_id: String, secondary_id: String,
-      adj_factor_main: Double, adj_factor_secondary: Double)
-
   /** D3 — continuous series: the main contract's bar each day, with and
-    * without back-adjustment. Factor rows apply to all dates ≤ their
-    * roll date (reverse as-of), latest factor = neutral.
+    * without back-adjustment, as [[SeriesRow]]s.
     *
-    * @param cacheInput persist `bars` for the duration of the call. Pass
-    *   false when the input is already materialized (a table scan or a
-    *   caller-managed cache) — re-scanning it per branch is then cheaper
-    *   than building an InMemoryRelation of it.
+    * One pass: the per-type scan over the shared phase-1 reduction (a
+    * board that already ran d1/d2 over the same bar table reuses their
+    * materialized (type, day) rows) emits the series itself, because
+    * each reduced day row carries every contract's closes and the scan
+    * holds every factor. There is no join back to the bars and no as-of
+    * join of the factors. A null `instrument_type` gives no rows, like
+    * the inner join of the join form.
+    *
+    * The result is persisted, so a caller that reads it twice runs the
+    * scan once, and released by the caller (`unpersist`, or
+    * [[graft.core.Scratch.materialize]]). Nothing else is cached, so the
+    * call runs no job of its own beyond the phase-1 materialization; the
+    * scan runs with the caller's first action.
+    *
+    * @param cacheInput kept only for source compatibility; ignored. The
+    *   scan reads the phase-1 reduction, which is the only consumer of
+    *   `bars`, so nothing is gained by caching them.
     */
   def continuousSeries(spark: SparkSession, bars: DataFrame,
       method: Method = Division, cacheInput: Boolean = true): DataFrame = {
     import spark.implicits._
-    // The scan and the md join both consume `bars`; persist so Spark
-    // doesn't re-evaluate the upstream aggregation DAG per branch (the
-    // bar table is the per-(contract, day) rollup — small relative to
-    // its source).
-    val callerCached = !cacheInput ||
-      bars.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (callerCached) bars else bars.persist()
-    // Shared d-family reduction: a board that already ran d1/d2 over the
-    // same bar table reuses their materialized (type, day) rows here.
-    val scanned = reducedDayFull(spark, cached).groupByKey(_.instrument_type)
-      .flatMapSortedGroups(col("trade_date")) { (t, it) =>
-        val (sels, facs) = scanReduced(t, it, method)
-        sels.iterator.map(s =>
-          ScanOut(0, s.instrument_type, s.trade_date, s.main_id, s.secondary_id, 0.0, 0.0)) ++
-        facs.iterator.map(f =>
-          ScanOut(1, f.instrument_type, f.trade_date, f.instrument_id_main,
-            f.instrument_id_secondary, f.adj_factor_main, f.adj_factor_secondary))
-      }(Encoders.product[ScanOut])
+    reducedDayFull(spark, bars).groupByKey(_.instrument_type)
+      .flatMapSortedGroups(col("trade_date")) { (t, days) =>
+        if (t == null) Iterator.empty
+        else {
+          val (mains, facs) = scanReduced(t, days, method)
+          emitSeries(mains, facs, method)
+        }
+      }(Encoders.product[SeriesRow])
       .toDF().persist()
-    scanned.count()
-    val sel = scanned.filter(col("kind") === 0)
-      .select(col("instrument_type"), col("trade_date"), col("main_id"),
-        col("secondary_id"))
-    val fac = scanned.filter(col("kind") === 1)
-      .select(col("instrument_type"), col("trade_date").as("factor_date"),
-        col("adj_factor_main"))
-    val md = cached.select(col("instrument_type"), col("instrument_id").as("bar_id"),
-      col("trade_date").cast("date").as("trade_date"), col("close").cast("double"))
-    val joined = sel.join(md, Seq("instrument_type", "trade_date"))
-      .where(col("bar_id") === col("main_id"))
-      .select(col("instrument_type"), col("trade_date"), col("main_id"), col("close"))
-    // Factor valid for dates ≤ roll date → as-of forward: for each daily
-    // row take the earliest factor_date ≥ trade_date. Negate dates to
-    // reuse the backward as-of kernel — the NATIVE one
-    // (plans/AsOfJoinPlan): same contract as AsOfJoin.asofBackward
-    // (differentially pinned), one streamed merge per co-partition
-    // instead of union + window.
-    val joinedNeg = joined.withColumn("neg_d", -unix_date(col("trade_date")))
-    val facNeg = fac.withColumn("neg_fd", -unix_date(col("factor_date")))
-    val applied = graft.plans.AsOfJoinPlan.asofBackwardNative(joinedNeg, facNeg,
-      Seq("instrument_type"),
-      leftTime = "neg_d", rightTime = "neg_fd", valueCols = Seq("adj_factor_main"))
-    val adj = method match {
-      case Division => col("close") * coalesce(col("adj_factor_main"), lit(1.0))
-      case Diff => col("close") + coalesce(col("adj_factor_main"), lit(0.0))
-    }
-    val result = applied.withColumn("close_adj", adj)
-      .select("instrument_type", "trade_date", "main_id", "close", "adj_factor_main", "close_adj")
-      .persist()
-    // Pin the (one row per type×day — small) result, then free the two
-    // corpus-sized intermediates; without this every call leaks both
-    // caches for the session lifetime.
-    result.count()
-    if (!callerCached) cached.unpersist()
-    scanned.unpersist()
-    result
-  }
-
-  // ── Legacy whole-bar scan (test-only differential oracle) ───────────
-
-  /** The pre-round-9 single-phase scan: decode every raw bar inside one
-    * `flatMapGroups` per type. Retained ONLY as the differential oracle
-    * for the two-phase pipeline (ContinuousFuturesSpec) — parallelism
-    * capped at #types makes it the documented scale anti-pattern.
-    */
-  private[graft] def legacyScan(spark: SparkSession, bars: DataFrame,
-      method: Method): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val ds = bars.select(
-      col("instrument_type").cast("string"),
-      col("instrument_id").cast("string"),
-      unix_date(col("trade_date").cast("date")).as("trade_date"),
-      col("close").cast("double"),
-      col("switch_by").cast("double"),
-      unix_date(col("last_trade_date").cast("date")).as("last_trade_date")).as[Bar]
-    val sels = ds.groupByKey(_.instrument_type)
-      .flatMapGroups((t, it) => legacyScanType(t, it, method)._1.iterator)(Encoders.product[Selection])
-      .toDF()
-    val facs = ds.groupByKey(_.instrument_type)
-      .flatMapGroups((t, it) => legacyScanType(t, it, method)._2.iterator)(Encoders.product[FactorRow])
-      .toDF()
-    (sels, facs)
-  }
-
-  private case class DayData(date: Int,
-      bySwitch: Seq[(String, Double)], closes: Map[String, Double])
-
-  private def legacyScanType(instrumentType: String, bars: Iterator[Bar], method: Method)
-      : (Seq[Selection], Seq[FactorRow]) = {
-    val all = bars.toArray
-    val maturity: Map[String, Int] =
-      all.groupBy(_.instrument_id).map { case (id, rs) =>
-        id -> rs.head.last_trade_date
-      }
-    def earlier(a: String, b: String): Boolean = maturity(a) < maturity(b)
-    val days: Array[DayData] = all.groupBy(_.trade_date).toArray
-      .sortBy(_._1)
-      .map { case (d, rs) =>
-        // sw as tertiary key pins degenerate duplicate (day, id) rows
-        // with differing switch_by to the SAME resolution as phase 1's
-        // sort_array((maturity, id, sw)) + last-wins HashMap: visit
-        // order small→large sw, map value = largest sw. Without it the
-        // stable sortBy left duplicate resolution to input order.
-        val bySwitch = rs.filter(_.switch_by.isDefined)
-          .sortBy(r => (maturity(r.instrument_id), r.instrument_id, r.switch_by.get))
-          .map(r => r.instrument_id -> r.switch_by.get).toSeq
-        val closes = rs.flatMap(r => r.close.map(r.instrument_id -> _)).toMap
-        DayData(d, bySwitch, closes)
-      }
-
-    var main: Option[String] = None
-    var sec: Option[String] = None
-    val selections = mutable.ArrayBuffer[Selection]()
-    val factors = mutable.ArrayBuffer[(Int, String, Option[Double], Option[String], Option[Double])]()
-    var available = mutable.ArrayBuffer[DayData]()
-    for (day <- days; if day.bySwitch.nonEmpty) {
-      val sw = day.bySwitch.toMap
-      val (mainLast, secLast) = (main, sec)
-      for ((id, v) <- day.bySwitch) {
-        if (!(main.isDefined && earlier(id, main.get))) {
-          if (main.isEmpty) main = Some(id)
-          else if (!sw.contains(main.get) || sw(main.get) < v) {
-            main = Some(id)
-            if (sec.isDefined && (main.get == sec.get || earlier(sec.get, main.get)))
-              sec = None
-          }
-          if (sec.isEmpty) {
-            if (!main.contains(id)) sec = Some(id)
-          } else if (earlier(sec.get, id) && sw.contains(sec.get) && sw(sec.get) < v)
-            sec = Some(id)
-        }
-      }
-      if (mainLast.isDefined && mainLast != main && available.nonEmpty) {
-        val prevDay = available.last
-        val chg = for {
-          cNew <- prevDay.closes.get(main.get)
-          cOld <- prevDay.closes.get(mainLast.get)
-        } yield if (method == Division) cNew / cOld else cNew - cOld
-        chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-          factors += ((prevDay.date, mainLast.get, Some(v), None, None))
-        }
-      }
-      if (secLast.isDefined && sec.isDefined && secLast != sec && available.nonEmpty) {
-        val prevDay = available.last
-        val chg = for {
-          cNew <- prevDay.closes.get(sec.get)
-          cOld <- prevDay.closes.get(secLast.get)
-        } yield if (method == Division) cNew / cOld else cNew - cOld
-        chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-          factors.lastOption match {
-            case Some((d, m0, f0, _, _)) if d == prevDay.date =>
-              factors(factors.length - 1) = (d, m0, f0, Some(secLast.get), Some(v))
-            case _ =>
-              factors += ((prevDay.date, main.get, None, Some(secLast.get), Some(v)))
-          }
-        }
-      }
-      available += day
-      main.foreach(m => selections += Selection(instrumentType, toSqlDate(day.date), m, sec.orNull))
-    }
-    val lastRows: Seq[(Int, String, Option[Double], Option[String], Option[Double])] =
-      (available.lastOption, main, sec) match {
-        case (Some(day), Some(m), s) =>
-          Seq((day.date, m, Some(method.neutral), s, Some(method.neutral)))
-        case _ => Seq.empty
-      }
-    val raw = (factors.filterNot(f => lastRows.exists(_._1 == f._1)) ++ lastRows)
-      .sortBy(-_._1)
-    var accM = method.neutral
-    var accS = method.neutral
-    var lastMainId: Option[String] = None
-    var lastSecId: Option[String] = None
-    val out = raw.map { case (d, mainId, fM, secId, fS) =>
-      accM = method match {
-        case Division => accM * fM.getOrElse(1.0)
-        case Diff => accM + fM.getOrElse(0.0)
-      }
-      accS = method match {
-        case Division => accS * fS.getOrElse(1.0)
-        case Diff => accS + fS.getOrElse(0.0)
-      }
-      lastMainId = Some(mainId)
-      lastSecId = secId.orElse(lastSecId)
-      (d, FactorRow(instrumentType, toSqlDate(d), mainId, accM, lastSecId.orNull, accS))
-    }.sortBy(_._1).map(_._2)
-    (selections.toSeq, out.toSeq)
   }
 }

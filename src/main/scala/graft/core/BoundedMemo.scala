@@ -36,7 +36,7 @@ final class BoundedMemo[K, V](maxEntries: Int) {
 
   private val map = new java.util.LinkedHashMap[K, Cell](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, Cell]): Boolean =
-      size() > maxEntries
+      this.size() > maxEntries
   }
 
   def getOrElseUpdate(key: K, compute: => V): V = {

@@ -189,8 +189,10 @@ object Scratch {
   /** Materialize a (typically `persist()`-pinned) DataFrame to scratch
     * parquet, release the in-memory copy, and return the parquet-backed
     * read. This is the standard release point for operators that return
-    * persisted results ([[graft.operators.Dedup.minHashDupPairs]],
-    * [[graft.analytics.ContinuousFutures.continuousSeries]]): holding
+    * persisted results ([[graft.operators.Dedup.minHashDupPairs]];
+    * [[graft.analytics.ContinuousFutures.continuousSeries]], whose
+    * persisted result is still unfilled, so this write is what runs its
+    * scan): holding
     * the cache for the session's life pins executor memory and builds GC
     * pressure that taxes every LATER job in the session — the parquet
     * copy costs one small write and is re-readable at full parallelism.

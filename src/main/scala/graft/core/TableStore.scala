@@ -453,9 +453,35 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def upsert(spec: TableSpec, batch0: DataFrame, newWins: Boolean = true,
       evictMovedKeys: Boolean = true,
+      props: Map[String, String] = Map.empty): Unit =
+    upsertConformed(spec, conformToSchema(spec, batch0, "upsert"), None,
+      newWins, evictMovedKeys, props)
+
+  /** [[upsert]] that commits no version for an empty batch, as a
+    * streaming sink needs for its no-data triggers. On a partitioned
+    * table one collect of the conformed batch's partition paths says
+    * both whether the batch is empty and which partitions the merge
+    * touches, so the check costs no job of its own; an unpartitioned
+    * batch is counted. The batch is read again by the merge, so the
+    * caller should cache it.
+    */
+  def upsertIfNonEmpty(spec: TableSpec, batch0: DataFrame): Unit = {
+    val batch = conformToSchema(spec, batch0, "upsert")
+    if (spec.partitionBy.isEmpty) {
+      if (batch.count() > 0) upsertConformed(spec, batch, None)
+    } else {
+      val parts = partitionPaths(spec, batch)
+      if (parts.nonEmpty) upsertConformed(spec, batch, Some(parts))
+    }
+  }
+
+  /** The body of [[upsert]] for a batch already conformed to the spec;
+    * `knownParts` are the batch's partition paths if already collected. */
+  private def upsertConformed(spec: TableSpec, batch: DataFrame,
+      knownParts: Option[Set[String]], newWins: Boolean = true,
+      evictMovedKeys: Boolean = true,
       props: Map[String, String] = Map.empty): Unit = {
     require(spec.primaryKey.nonEmpty, s"${spec.name}: upsert needs a primary key")
-    val batch = conformToSchema(spec, batch0, "upsert")
     val f = fs
     // Batch row order decides in-batch duplicates, like the reference's
     // sequential INSERT..ON DUPLICATE loop: last occurrence wins for
@@ -490,7 +516,9 @@ final class TableStore(spark: SparkSession, root: String) {
         s"TableStore: upsert batch for ${spec.name} lacks existing columns " +
         s"${missing.mkString(", ")}; select them (or null literals) explicitly")
     // Partition pruning: only merge against partitions the batch touches.
-    val batchParts = if (spec.partitionBy.isEmpty) Set.empty[String] else partitionPaths(spec, batch)
+    val batchParts =
+      if (spec.partitionBy.isEmpty) Set.empty[String]
+      else knownParts.getOrElse(partitionPaths(spec, batch))
     // Moved-key eviction (see scaladoc): partitions that still hold an old
     // home of an incoming key join the rewrite set, so the keep-latest
     // merge drops the stale row when the partition is rewritten.

@@ -237,12 +237,10 @@ object DomainQueries {
         .orderBy(col("instrument_type"), col("trade_date"))),
 
     "d3_continuous_series" -> ((s, d) =>
-      // continuousSeries returns a persisted result (it must pin the
-      // series before freeing its own scan caches); scratch-materialize
+      // continuousSeries returns a persisted result; scratch-materialize
       // so the pin doesn't outlive the query.
       graft.core.Scratch.materialize(
-        ContinuousFutures.continuousSeries(s, futuresBarsCached(s, d),
-          ContinuousFutures.Diff, cacheInput = false),
+        ContinuousFutures.continuousSeries(s, futuresBarsCached(s, d), ContinuousFutures.Diff),
         "d3_series", d)
         .withColumn("close", round6(col("close")))
         .withColumn("close_adj", round6(col("close_adj")))
@@ -371,8 +369,7 @@ object DomainQueries {
         "adj_factor_main", "close_adj")
       def series(b: DataFrame, tag: String): DataFrame =
         graft.core.Scratch.materialize(
-          ContinuousFutures.continuousSeries(s, b, ContinuousFutures.Diff,
-            cacheInput = false),
+          ContinuousFutures.continuousSeries(s, b, ContinuousFutures.Diff),
           "e2e_series", s"$tag|$d")
           .withColumn("yr", year(col("trade_date")))
           .select((seriesCols :+ "yr").map(col): _*)

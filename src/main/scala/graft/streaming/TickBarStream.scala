@@ -52,11 +52,13 @@ object TickBarStream {
     * the watermark re-emit their bar; the PK upsert makes the re-emit
     * (and any replay after failure) idempotent.
     *
-    * Each epoch is evaluated once: the sink persists the batch, counts it
-    * (the one job that runs the stateful stage), and the upsert's
-    * partition collect, moved-key scan and merge all read the cache,
-    * which is released when the trigger ends. An empty epoch (the
-    * no-data trigger that follows each batch) commits no table version.
+    * Each epoch is evaluated once: the sink persists the batch, and the
+    * first job over it (on a partitioned table the collect of its
+    * partition paths, which also tells an empty epoch; otherwise a
+    * count) runs the stateful stage. The moved-key scan and merge read
+    * the cache, which is released when the trigger ends. An empty epoch
+    * (the no-data trigger that follows each batch) commits no table
+    * version.
     */
   def upsertingSink(bars: DataFrame, store: graft.core.TableStore,
       spec: graft.core.TableSpec, queryName: String)
@@ -66,7 +68,7 @@ object TickBarStream {
       .queryName(queryName)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.persist()
-        try if (batch.count() > 0) store.upsert(spec, batch.toDF())
+        try store.upsertIfNonEmpty(spec, batch.toDF())
         finally batch.unpersist(blocking = true)
       }
 

@@ -1,7 +1,9 @@
 package graft
 
-import graft.analytics.ContinuousFutures
-import graft.analytics.ContinuousFutures.{Diff, Division}
+import graft.analytics.{ContinuousFutures, ContinuousFuturesOracles}
+import graft.analytics.ContinuousFutures.{Diff, Division, Method}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden scenario per FIXTURES.md §7: three contracts, two volume-driven
@@ -105,7 +107,7 @@ class ContinuousFuturesSpec extends AnyFunSuite with SharedSpark {
       val got = ContinuousFutures.dailySelection(spark, bars)
         .collect().map(r => (r.getString(0), r.getDate(1).toString,
           r.getString(2), Option(r.getString(3)))).sortBy(x => (x._1, x._2))
-      val want = ContinuousFutures.legacyScan(spark, bars, Division)._1
+      val want = ContinuousFuturesOracles.legacyScan(spark, bars, Division)._1
         .collect().map(r => (r.getString(0), r.getDate(1).toString,
           r.getString(2), Option(r.getString(3)))).sortBy(x => (x._1, x._2))
       assert(got.length == want.length, s"seed=$seed row counts differ")
@@ -124,7 +126,7 @@ class ContinuousFuturesSpec extends AnyFunSuite with SharedSpark {
           math.rint(r.getDouble(5) * 1e9))
       val got = ContinuousFutures.adjFactors(spark, bars, method)
         .collect().map(key).sortBy(x => (x._1, x._2))
-      val want = ContinuousFutures.legacyScan(spark, bars, method)._2
+      val want = ContinuousFuturesOracles.legacyScan(spark, bars, method)._2
         .collect().map(key).sortBy(x => (x._1, x._2))
       assert(got.toSeq == want.toSeq, s"seed=$seed method=$method factors diverge")
       assert(got.nonEmpty, s"seed=$seed produced no rolls")
@@ -142,10 +144,83 @@ class ContinuousFuturesSpec extends AnyFunSuite with SharedSpark {
           r.getDouble(3), Option(r.getString(4)), r.getDouble(5))
       val got = ContinuousFutures.adjFactors(spark, bars, method)
         .collect().map(key).sortBy(x => (x._1, x._2))
-      val want = ContinuousFutures.adjFactorsSerial(spark, bars, method)
+      val want = ContinuousFuturesOracles.adjFactorsSerial(spark, bars, method)
         .collect().map(key).sortBy(x => (x._1, x._2))
       assert(got.toSeq == want.toSeq, s"seed=$seed method=$method not bit-identical")
       assert(got.nonEmpty)
+    }
+  }
+
+  /** [[randomBars]] plus the rows the series must carry through as the
+    * bar join did: 3% duplicate bar rows (half of them with a null
+    * close) and a group of bars with a null instrument type. */
+  private def seriesBars(seed: Int): DataFrame = {
+    val base = randomBars(seed)
+    val dups = base.sample(withReplacement = false, 0.03, seed.toLong)
+    val nullClose = dups.withColumn("close",
+      when(xxhash64(col("instrument_id"), col("trade_date")) % 2 === 0, lit(null))
+        .otherwise(col("close")))
+    val nullType = base.filter(col("instrument_type") === "T1" &&
+        col("trade_date") < java.sql.Date.valueOf("2020-01-01"))
+      .withColumn("instrument_type", lit(null).cast("string"))
+    base.unionByName(nullClose).unionByName(nullType)
+  }
+
+  /** The join form `continuousSeries` ran before it emitted the series
+    * from its scan, kept here as the reference: the selections joined
+    * back to the bars for the main contract's close, and the factors
+    * applied by a negated-date as-of join (earliest factor_date ≥
+    * trade_date). Selections and factors come from the legacy scan, so
+    * the reference shares no close handling with the code under test. */
+  private def joinFormSeries(bars: DataFrame, method: Method): DataFrame = {
+    val (sels, facs) = ContinuousFuturesOracles.legacyScan(spark, bars, method)
+    val sel = sels.select(col("instrument_type"), col("trade_date"), col("main_id"))
+    val fac = facs.select(col("instrument_type"), col("trade_date").as("factor_date"),
+      col("adj_factor_main"))
+    val md = bars.select(col("instrument_type"), col("instrument_id").as("bar_id"),
+      col("trade_date").cast("date").as("trade_date"), col("close").cast("double"))
+    val joined = sel.join(md, Seq("instrument_type", "trade_date"))
+      .where(col("bar_id") === col("main_id"))
+      .select(col("instrument_type"), col("trade_date"), col("main_id"), col("close"))
+    val applied = graft.plans.AsOfJoinPlan.asofBackwardNative(
+      joined.withColumn("neg_d", -unix_date(col("trade_date"))),
+      fac.withColumn("neg_fd", -unix_date(col("factor_date"))),
+      Seq("instrument_type"), leftTime = "neg_d", rightTime = "neg_fd",
+      valueCols = Seq("adj_factor_main"))
+    val adj = method match {
+      case Division => col("close") * coalesce(col("adj_factor_main"), lit(1.0))
+      case Diff => col("close") + coalesce(col("adj_factor_main"), lit(0.0))
+    }
+    applied.withColumn("close_adj", adj)
+      .select("instrument_type", "trade_date", "main_id", "close", "adj_factor_main", "close_adj")
+  }
+
+  /** Series rows; doubles by their bits, null as None. */
+  private def seriesBits(df: DataFrame): Seq[(String, String, String, Option[Long],
+      Option[Long], Option[Long])] = {
+    def bits(r: Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+    df.collect().toSeq.map(r => (r.getString(0), r.getDate(1).toString, r.getString(2),
+      bits(r, 3), bits(r, 4), bits(r, 5)))
+  }
+
+  test("one-pass series ≡ the bar join + as-of form, BIT-exact (randomized)") {
+    for (seed <- Seq(1, 7, 42); method <- Seq(Division, Diff)) {
+      val bars = seriesBars(seed)
+      val series = ContinuousFutures.continuousSeries(spark, bars, method)
+      val got = try seriesBits(series) finally series.unpersist()
+      val want = seriesBits(joinFormSeries(bars, method))
+      val missing = want.diff(got)
+      val extra = got.diff(want)
+      val same = missing.isEmpty && extra.isEmpty
+      assert(same, s"seed=$seed method=$method: ${got.length} rows vs ${want.length}; " +
+        s"${missing.size} missing (first ${missing.headOption}), " +
+        s"${extra.size} extra (first ${extra.headOption})")
+      // the fixture must reach every case the join form handled
+      assert(got.exists(_._4.isEmpty), s"seed=$seed: no main bar with a null close")
+      assert(got.distinct.length < got.length, s"seed=$seed: no duplicate main bar")
+      assert(got.map(_._5).distinct.length > 3, s"seed=$seed: too few factors applied")
+      assert(got.forall(_._1 != null))
     }
   }
 

@@ -74,6 +74,34 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       s"d1's scan should prune the closes column:\n$p")
   }
 
+  test("d3 continuous series plans no join and at most two shuffles") {
+    // The per-type scan emits the series itself from the phase-1 day
+    // rows: no join back to the bars, no as-of join of the factors. The
+    // only shuffles are the phase-1 reduction (materialized to scratch,
+    // so normally not in this plan) and the per-type scan's grouping.
+    // Counted on the executed nodes: explain prints a cached, adaptive
+    // plan several times over.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def nodes(p: SparkPlan): Seq[SparkPlan] = Nodes.collect(p) { case n => n }.flatMap {
+      case c: InMemoryTableScanExec => c +: nodes(c.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    val df = graft.analytics.ContinuousFutures.continuousSeries(spark,
+      graft.queries.DomainQueries.futuresBars(spark, sf), graft.analytics.ContinuousFutures.Diff)
+    try {
+      df.collect() // the final adaptive plan
+      val executed = nodes(df.queryExecution.executedPlan)
+      val p = simple(df)
+      assert(!executed.exists(_.nodeName.contains("Join")), s"continuousSeries plans a join:\n$p")
+      assert(executed.count(_.isInstanceOf[ShuffleExchangeExec]) <= 2,
+        s"continuousSeries plans more than two shuffles:\n$p")
+      assert(executed.exists(_.isInstanceOf[ShuffleExchangeExec]), "no node reached")
+    } finally df.unpersist()
+  }
+
   test("a1 aggregation is partial (map-side combine) and codegen'd") {
     val df = SparkEntry.queries("a1_pricing_summary")(spark, sf)
     assert(simple(df).contains("partial_sum"), "no map-side partial aggregation")
@@ -277,7 +305,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
 
   test("typed futures scans compile to codegen (no interpreter-fallback projections)") {
     // Round-5 regression class: Option[String] fields / a private nested
-    // case class made the ScanOut product UnsafeProjection fail Janino
+    // case class made the scan's output product UnsafeProjection fail Janino
     // compilation, silently dropping every d1/d3 output row to
     // interpreter-mode projection (a WARN, not an error). CODEGEN_ONLY
     // turns that fallback into a hard failure. Call the analytics entry

@@ -282,4 +282,84 @@ class TableStoreCommitSpec extends AnyFunSuite with SharedSpark {
       spark.sparkContext.removeSparkListener(listener)
     }
   }
+
+  test("upsertingSink's partition collect also tells an empty epoch: " +
+    "one job fewer per data trigger than counting first") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val spec = TableSpec("bars", Seq("sym", "day", "bar_start"), partitionBy = Seq("day"))
+    def day(d: String, seq0: Long): Seq[(String, Timestamp, Long, Double)] =
+      for (s <- Seq("a", "b", "c"); m <- 0 until 4; t <- 0 until 3)
+        yield (s, Timestamp.valueOf(f"$d 09:3$m:${t * 10}%02d"), seq0 + m * 3 + t,
+          100.0 + m * 0.5 + t * 0.125)
+    // the sink's former body, kept as the reference: count the cached
+    // epoch, then upsert it
+    def countingSink(bars: DataFrame, store: TableStore, name: String) =
+      bars.writeStream.outputMode("update").queryName(name)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+          batch.persist()
+          try if (batch.count() > 0) store.upsert(spec, batch.toDF())
+          finally batch.unpersist(blocking = true)
+        }
+
+    // jobs per (query id, micro-batch id)
+    val jobs = new ConcurrentHashMap[(String, Long), AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).foreach { p =>
+          for (q <- Option(p.getProperty("sql.streaming.queryId"));
+               b <- Option(p.getProperty("streaming.sql.batchId")))
+            jobs.computeIfAbsent((q, b.toLong), _ => new AtomicInteger).incrementAndGet()
+        }
+    }
+    val days = Seq("2024-01-03", "2024-01-04", "2024-01-05")
+    /** Runs one query over the three days into a store preloaded with a
+      * first day, so every data trigger merges; returns the store and
+      * (data-trigger jobs, no-data-trigger jobs) in batch order. */
+    def run(name: String, sink: (DataFrame, TableStore) => org.apache.spark.sql.streaming
+        .DataStreamWriter[Row]): (TableStore, Seq[Int], Seq[Int]) = {
+      val store = new TableStore(spark, freshRoot(name))
+      store.upsert(spec, graft.streaming.TickBarStream.bars(
+        day("2024-01-02", 0L).toDF("sym", "ts", "seq", "price")
+          .withColumn("day", to_date(col("ts"))),
+        Seq("sym", "day"), "ts", "seq", "price", "1 minute", "10 minutes"))
+      val in = MemoryStream[(String, Timestamp, Long, Double)]
+      val ticks = in.toDF().toDF("sym", "ts", "seq", "price")
+        .withColumn("day", to_date(col("ts")))
+      val q = graft.streaming.TickBarStream.withShufflePartitions(spark, 2) {
+        sink(graft.streaming.TickBarStream.bars(ticks, Seq("sym", "day"), "ts", "seq",
+          "price", "1 minute", "10 minutes"), store).start()
+      }
+      try {
+        days.zipWithIndex.foreach { case (d, i) =>
+          in.addData(day(d, (i + 1) * 100L))
+          q.processAllAvailable()
+        }
+        org.apache.spark.ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 10000)
+        def jobsOf(b: Long) = Option(jobs.get((q.id.toString, b))).map(_.get).getOrElse(0)
+        val progress = q.recentProgress.toSeq.sortBy(_.batchId)
+        (store, progress.filter(_.numInputRows > 0).map(p => jobsOf(p.batchId)),
+          progress.filter(_.numInputRows == 0).map(p => jobsOf(p.batchId)))
+      } finally q.stop()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (store, dataJobs, idleJobs) = run("sink_collect", (b, st) =>
+        graft.streaming.TickBarStream.upsertingSink(b, st, spec, "commit_spec_collect"))
+      val (refStore, refDataJobs, refIdleJobs) = run("sink_count", (b, st) =>
+        countingSink(b, st, "commit_spec_count"))
+      assert(dataJobs.size == days.size && refDataJobs.size == days.size)
+      assert(dataJobs == refDataJobs.map(_ - 1),
+        s"jobs per data trigger: $dataJobs, counting first: $refDataJobs")
+      assert(idleJobs.nonEmpty && idleJobs.size == refIdleJobs.size)
+      assert(idleJobs == refIdleJobs,
+        s"jobs per no-data trigger: $idleJobs, counting first: $refIdleJobs")
+      // the same table, and one version per data trigger after the preload
+      assert(store.versions(spec).last == 1L + days.size)
+      assert(refStore.versions(spec).last == 1L + days.size)
+      val cols = store.read(spec).columns.toSeq.sorted
+      assert(bits(store.read(spec), cols) == bits(refStore.read(spec), cols))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -1,13 +1,13 @@
 package graft.tools
 
-import graft.analytics.ContinuousFutures
+import graft.analytics.{ContinuousFutures, ContinuousFuturesOracles}
 import graft.analytics.ContinuousFutures.{Diff, Division}
 import org.apache.spark.sql.SparkSession
 
 /** In-engine sf-scale differential for the D1 family: run the production
-  * two-phase pipeline (`dailySelection` / `adjFactors`) AND the retained
-  * legacy whole-bar scan on the REAL bars of a given SF dir and assert
-  * exact agreement. Complements the DuckDB recursive-CTE oracle, whose
+  * two-phase pipeline (`dailySelection` / `adjFactors`) AND the legacy
+  * whole-bar scan ([[ContinuousFuturesOracles.legacyScan]]) on the REAL
+  * bars of a given SF dir and assert exact agreement. Complements the DuckDB recursive-CTE oracle, whose
   * replay cost at sf0.1 (~600 k bars) makes sweep-time validation
   * impractical — the legacy scan is an independent implementation of the
   * same reference semantics
@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * same evidence the randomized ContinuousFuturesSpec differential gives
   * hermetically.
   *
-  * Usage: runMain graft.tools.D1Differential /root/testdata/sf0.1
+  * Usage: sbt "Test/runMain graft.tools.D1Differential <sfDir>"
   */
 object D1Differential {
   def main(args: Array[String]): Unit = {
@@ -28,7 +28,7 @@ object D1Differential {
     val gotSel = ContinuousFutures.dailySelection(spark, bars)
       .collect().map(r => (r.getString(0), r.getDate(1).toString,
         r.getString(2), Option(r.getString(3)))).sortBy(x => (x._1, x._2))
-    val wantSel = ContinuousFutures.legacyScan(spark, bars, Division)._1
+    val wantSel = ContinuousFuturesOracles.legacyScan(spark, bars, Division)._1
       .collect().map(r => (r.getString(0), r.getDate(1).toString,
         r.getString(2), Option(r.getString(3)))).sortBy(x => (x._1, x._2))
     val selOk = gotSel.toSeq == wantSel.toSeq
@@ -43,7 +43,7 @@ object D1Differential {
           math.rint(r.getDouble(5) * 1e9))
       val got = ContinuousFutures.adjFactors(spark, bars, method)
         .collect().map(key).sortBy(x => (x._1, x._2))
-      val want = ContinuousFutures.legacyScan(spark, bars, method)._2
+      val want = ContinuousFuturesOracles.legacyScan(spark, bars, method)._2
         .collect().map(key).sortBy(x => (x._1, x._2))
       val ok = got.toSeq == want.toSeq
       factorsOk &= ok
