@@ -43,12 +43,17 @@ import scala.collection.mutable
   *    The differential is pinned in ContinuousFuturesSpec against the
   *    whole-bar legacy scan kept in the test sources.
   *
-  * D2 replays the factor scan per slice the same way. D3 runs the
-  * factor scan whole-type over the phase-1 reduction, so its serial
-  * chain is O(candidate entries), not O(raw bars), and emits the
-  * adjusted series in the same pass: the reduced day row already holds
-  * every contract's close, so the series needs no join back to the bars
-  * and no as-of join of the factors.
+  * D2 and D3 share one roll scan and one factor fold. The roll scan
+  * ([[RollScan]]) is the selection state plus the previous day's
+  * closes; its `step(day)` detects and prices each day's main and
+  * secondary roll and emits them as roll events. D2 replays it per
+  * slice the same way as D1, from exact seeds; D3 runs it whole-type
+  * over the phase-1 reduction (a serial chain of O(candidate entries),
+  * not O(raw bars)). Per type, both emit the same events and fold them
+  * with the same [[cumulateEvents]] into the same factors. D3 then
+  * emits the adjusted series in the same pass: the reduced day row
+  * already holds every contract's close, so the series needs no join
+  * back to the bars and no as-of join of the factors.
   *
   * Contract maturity is taken from the candidate row at selection time
   * (the data model has one expiry per contract, so this matches the
@@ -77,9 +82,26 @@ object ContinuousFutures {
       main_id: String, close: java.lang.Double, adj_factor_main: java.lang.Double,
       close_adj: java.lang.Double)
 
-  sealed trait Method { def neutral: Double }
-  case object Division extends Method { val neutral = 1.0 }
-  case object Diff extends Method { val neutral = 0.0 }
+  /** Back-adjustment arithmetic, in one place. `roll` prices a roll from
+    * the new and the old contract's close; `combine` applies a factor,
+    * both in the reverse factor fold (`combine(acc, f)`, a missing
+    * factor passed as `neutral`, never skipped: `-0.0 + 0.0` is `0.0`)
+    * and to a close (`combine(close, factor)`). */
+  sealed trait Method {
+    def neutral: Double
+    def roll(cNew: Double, cOld: Double): Double
+    def combine(a: Double, f: Double): Double
+  }
+  case object Division extends Method {
+    val neutral = 1.0
+    def roll(cNew: Double, cOld: Double): Double = cNew / cOld
+    def combine(a: Double, f: Double): Double = a * f
+  }
+  case object Diff extends Method {
+    val neutral = 0.0
+    def roll(cNew: Double, cOld: Double): Double = cNew - cOld
+    def combine(a: Double, f: Double): Double = a + f
+  }
 
   // ── Phase-1 reduced rows (public: Janino codegen needs public accessors) ──
 
@@ -112,7 +134,7 @@ object ContinuousFutures {
       main: String, mainMat: Int, sec: String, secMat: Int,
       prevDate: Int, prevCloses: Seq[CloseE])
 
-  /** One roll event from the sliced factor replay. kind 0 = main roll
+  /** One event of the roll scan ([[RollScan]]). kind 0 = main roll
     * (`mainId` is the OLD main, `value` its adjustment); kind 1 =
     * secondary roll (`mainId` is the CURRENT main, `secId` the old
     * secondary, `value` its adjustment); kind 2 = end sentinel
@@ -133,7 +155,7 @@ object ContinuousFutures {
 
   /** Mutable 4-field selection state. Maturities ride along so the
     * scan never needs a group-global lookup table. */
-  private final class SelState {
+  private class SelState {
     var main: String = null; var mainMat: Int = 0
     var sec: String = null; var secMat: Int = 0
   }
@@ -294,101 +316,89 @@ object ContinuousFutures {
     }(Encoders.product[Selection]).toDF()
   }
 
-  // ── D2/D3: whole-type factor scan over the phase-1 reduction ────────
+  // ── D2/D3: one roll scan, one factor fold ───────────────────────────
 
   /** A day's closes by contract id, for pricing a roll. Null closes
     * quote nothing: a roll needs both contracts' closes. */
   private def closeMap(closes: Seq[CloseE]): Map[String, Double] =
     closes.iterator.filter(_.close != null).map(c => c.id -> c.close.doubleValue).toMap
 
-  /** Run the per-type scan over reduced day rows, producing (each
-    * candidate-bearing day with its main contract, factor rows by
-    * epoch day, date-ascending). Sequential per type by definition (the
-    * reverse factor cumulation spans the whole history), but every
-    * per-bar cost was already paid distributed in phase 1. */
-  private[graft] def scanReduced(instrumentType: String, days: Iterator[DayFull],
-      method: Method): (Seq[(DayFull, String)], Seq[(Int, FactorRow)]) = {
-    val st = new SelState
-    val selections = mutable.ArrayBuffer[(DayFull, String)]()
-    val factors = mutable.ArrayBuffer[(Int, String, Option[Double], Option[String], Option[Double])]()
-    var prevDate = Int.MinValue
+  /** The roll scan of one type: the selection state plus the previous
+    * candidate-bearing day's date and closes, at which a roll detected
+    * on the next such day is priced. [[step]] appends a kind-0
+    * [[FacEvent]] per priced main roll and a kind-1 event per priced
+    * secondary roll; [[end]] appends the kind-2 sentinel. D2 seeds one
+    * scan per slice from its [[FacSeed]], D3 runs one cold over the
+    * whole type: both emit the same events. */
+  private final class RollScan(t: String, method: Method) extends SelState {
+    var prevDate = Int.MinValue // no candidate-bearing day yet
     var prevCloses: Map[String, Double] = Map.empty
-    var lastDate = Int.MinValue // last processed (candidate-bearing) day
-    var lastSeen = false
-    for (day <- days; if day.cands.nonEmpty) {
-      val mainLast = st.main
-      val secLast = st.sec
-      advanceDay(st, day.cands)
-      // roll detected → factor at the last available date
-      if (mainLast != null && mainLast != st.main && lastSeen) {
-        val chg = for {
-          cNew <- prevCloses.get(st.main)
-          cOld <- prevCloses.get(mainLast)
-        } yield if (method == Division) cNew / cOld else cNew - cOld
-        chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-          factors += ((prevDate, mainLast, Some(v), None, None))
-        }
-      }
-      if (secLast != null && st.sec != null && secLast != st.sec && lastSeen) {
-        val chg = for {
-          cNew <- prevCloses.get(st.sec)
-          cOld <- prevCloses.get(secLast)
-        } yield if (method == Division) cNew / cOld else cNew - cOld
-        chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-          // merge with a main-roll row on the same date if present
-          factors.lastOption match {
-            case Some((d, m0, f0, _, _)) if d == prevDate =>
-              factors(factors.length - 1) = (d, m0, f0, Some(secLast), Some(v))
-            case _ =>
-              factors += ((prevDate, st.main, None, Some(secLast), Some(v)))
-          }
-        }
+    val events = mutable.ArrayBuffer[FacEvent]()
+
+    def seed(s: FacSeed): Unit = {
+      main = s.main; mainMat = s.mainMat
+      sec = s.sec; secMat = s.secMat
+      prevDate = s.prevDate
+      prevCloses = closeMap(s.prevCloses)
+    }
+
+    /** The roll from `oldId` to `newId` at the previous day's closes;
+      * none when a close is missing or the value is NaN or infinite. */
+    private def priced(newId: String, oldId: String): Option[Double] =
+      for {
+        cNew <- prevCloses.get(newId)
+        cOld <- prevCloses.get(oldId)
+        v = method.roll(cNew, cOld)
+        if !v.isNaN && !v.isInfinite
+      } yield v
+
+    /** Advance one day; a candidate-free day is skipped (false). */
+    def step(day: DayFull): Boolean = {
+      val mainLast = main
+      val secLast = sec
+      if (!advanceDay(this, day.cands)) return false
+      if (prevDate != Int.MinValue) {
+        if (mainLast != null && mainLast != main)
+          priced(main, mainLast).foreach(v => events += FacEvent(t, prevDate, 0, mainLast, v, null))
+        if (secLast != null && sec != null && secLast != sec)
+          priced(sec, secLast).foreach(v => events += FacEvent(t, prevDate, 1, main, v, secLast))
       }
       prevDate = day.trade_date
       prevCloses = closeMap(day.closes)
-      lastDate = day.trade_date
-      lastSeen = true
-      if (st.main != null) selections += ((day, st.main))
+      true
     }
-    // latest date carries the neutral factor
-    val lastRows: Seq[(Int, String, Option[Double], Option[String], Option[Double])] =
-      if (lastSeen && st.main != null)
-        Seq((lastDate, st.main, Some(method.neutral),
-          Option(st.sec), Some(method.neutral)))
-      else Seq.empty
-    // reverse-chronological cumulation so the latest factor is neutral
-    val raw = (factors.filterNot(f => lastRows.exists(_._1 == f._1)) ++ lastRows)
-      .sortBy(-_._1)
-    var accM = method.neutral
-    var accS = method.neutral
-    var lastSecId: Option[String] = None
-    val out = raw.map { case (d, mainId, fM, secId, fS) =>
-      accM = method match {
-        case Division => accM * fM.getOrElse(1.0)
-        case Diff => accM + fM.getOrElse(0.0)
-      }
-      accS = method match {
-        case Division => accS * fS.getOrElse(1.0)
-        case Diff => accS + fS.getOrElse(0.0)
-      }
-      lastSecId = secId.orElse(lastSecId)
-      (d, FactorRow(instrumentType, toSqlDate(d), mainId, accM, lastSecId.orNull, accS))
-    }.sortBy(_._1)
-    (selections.toSeq, out.toSeq)
+
+    /** The end sentinel: the last candidate-bearing day and the final
+      * main/secondary, which carry the neutral last factor. */
+    def end(): Unit =
+      if (prevDate != Int.MinValue && main != null)
+        events += FacEvent(t, prevDate, 2, main, method.neutral, sec)
+  }
+
+  /** D3's scan of one type: the [[RollScan]] run cold over the whole
+    * type, returning each candidate-bearing day with its main contract
+    * and the factors folded from the scan's events by epoch day,
+    * date-ascending. Sequential per type by definition, but every
+    * per-bar cost was already paid distributed in phase 1. */
+  private[graft] def scanReduced(instrumentType: String, days: Iterator[DayFull],
+      method: Method): (Seq[(DayFull, String)], Seq[(Int, FactorRow)]) = {
+    val st = new RollScan(instrumentType, method)
+    val mains = mutable.ArrayBuffer[(DayFull, String)]()
+    for (day <- days) if (st.step(day) && st.main != null) mains += ((day, st.main))
+    st.end()
+    (mains.toSeq, cumulateEvents(instrumentType, st.events.toSeq, method))
   }
 
   /** D2 — back-adjustment factor series (sparse: one row per roll date
     * plus the latest date; apply as-of backward).
     *
     * == Scale architecture (round 11) ==
-    * The d1 slice-seeding discipline applied to the factor scan. The
-    * round-10 form ran [[scanReduced]] whole-type — a serial
-    * O(candidate entries) chain whose parallelism was #types, the worst
-    * remaining §2-core scaling ratio (sf1 3.25×). Now:
+    * The d1 slice-seeding discipline applied to the roll scan, so the
+    * serial chain is not the whole-type scan D3 runs:
     *
     *  - '''2a (boundary pass)''': streams each type's reduced day rows
     *    once carrying only (selection state, previous candidate-bearing
-    *    day's date + close list) and emits the exact factor-scan state
+    *    day's date + close list) and emits the exact [[RollScan]] state
     *    at each ~year slice boundary, plus an end-of-history sentinel
     *    (final main/sec at the last candidate day) for the neutral
     *    last row.
@@ -397,27 +407,24 @@ object ContinuousFutures {
     *    builds, roll detection and event encoding all run at
     *    type × slice parallelism — emitting only the sparse ROLL
     *    EVENTS (one per roll, not per day).
-    *  - '''Final fold''': the reverse cumulation is serial by
-    *    definition (it spans the whole history), but now folds over the
-    *    per-type EVENT list — rolls, typically a few per year — instead
-    *    of the day axis, with operand order identical to the serial
-    *    scan (so factors are bit-exact against it).
+    *  - '''Final fold''': [[cumulateEvents]] over the per-type event
+    *    list — rolls, typically a few per year — the same fold D3 runs
+    *    over the same events, so the factors are bit-exact against it.
     *
     * Replay from the true boundary state equals the whole-type scan by
-    * construction (the same transition function resumed mid-stream);
+    * construction (the same step resumed mid-stream);
     * ContinuousFuturesSpec pins equality against the whole-type scan.
     */
   def adjFactors(spark: SparkSession, bars: DataFrame, method: Method = Division): DataFrame = {
     import spark.implicits._
     val reduced = reducedDayFull(spark, bars)
     val events = facEvents(spark, reduced, facSeeds(spark, reduced), method)
-    // Final fold: reverse cumulation over the per-type ROLL LIST (tiny).
     // The sentinel arrives as a kind-2 event from the replay cogroup —
     // seeds are consumed exactly once, so the whole pipeline is a single
     // job with one 2a pass.
     events
       .groupByKey(_.instrument_type)
-      .flatMapGroups((t, it) => cumulateEvents(t, it.toSeq, method).iterator)(
+      .flatMapGroups((t, it) => cumulateEvents(t, it.toSeq, method).iterator.map(_._2))(
         Encoders.product[FactorRow])
       .toDF()
   }
@@ -452,11 +459,12 @@ object ContinuousFutures {
       }
   }
 
-  /** 2b: parallel replay per (type, slice) from the exact seed,
-    * emitting sparse roll events only. The end-of-history sentinel seed
-    * (slice = Int.MaxValue) forms a day-less cogroup key of its own and
-    * surfaces as a kind-2 event, so the caller consumes ONE dataset and
-    * the seeds subtree is evaluated exactly once. */
+  /** 2b: parallel replay per (type, slice), a [[RollScan]] seeded from
+    * the slice's exact seed, emitting sparse roll events only. The
+    * end-of-history sentinel seed (slice = Int.MaxValue) forms a
+    * day-less cogroup key of its own and surfaces as a kind-2 event, so
+    * the caller consumes ONE dataset and the seeds subtree is evaluated
+    * exactly once. */
   private def facEvents(spark: SparkSession, reduced: Dataset[DayFull],
       seeds: Dataset[FacSeed], method: Method): Dataset[FacEvent] = {
     import spark.implicits._
@@ -464,106 +472,50 @@ object ContinuousFutures {
     val seedByShard = seeds.groupByKey(s => (s.instrument_type, s.slice))
     byShard.cogroupSorted(seedByShard)(col("trade_date"))() {
       case ((t, sl), days, seedIt) =>
-        if (sl == Int.MaxValue) {
-          // sentinel shard: no day rows by construction
-          seedIt.map(s => FacEvent(t, s.prevDate, 2, s.main, method.neutral, s.sec))
-        } else {
-        val st = new SelState
-        var prevDate = Int.MinValue
-        var prevCloses: Map[String, Double] = Map.empty
-        seedIt.foreach { s =>
-          st.main = s.main; st.mainMat = s.mainMat
-          st.sec = s.sec; st.secMat = s.secMat
-          prevDate = s.prevDate
-          prevCloses = closeMap(s.prevCloses)
-        }
-        val out = mutable.ArrayBuffer[FacEvent]()
-        for (day <- days; if day.cands.nonEmpty) {
-          val mainLast = st.main
-          val secLast = st.sec
-          advanceDay(st, day.cands)
-          val seen = prevDate != Int.MinValue
-          if (mainLast != null && mainLast != st.main && seen) {
-            val chg = for {
-              cNew <- prevCloses.get(st.main)
-              cOld <- prevCloses.get(mainLast)
-            } yield if (method == Division) cNew / cOld else cNew - cOld
-            chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-              out += FacEvent(t, prevDate, 0, mainLast, v, null)
-            }
-          }
-          if (secLast != null && st.sec != null && secLast != st.sec && seen) {
-            val chg = for {
-              cNew <- prevCloses.get(st.sec)
-              cOld <- prevCloses.get(secLast)
-            } yield if (method == Division) cNew / cOld else cNew - cOld
-            chg.filter(v => !v.isNaN && !v.isInfinite).foreach { v =>
-              out += FacEvent(t, prevDate, 1, st.main, v, secLast)
-            }
-          }
-          prevDate = day.trade_date
-          prevCloses = closeMap(day.closes)
-        }
-        out.iterator
-        }
+        val st = new RollScan(t, method)
+        seedIt.foreach(st.seed)
+        // the sentinel shard has no day rows by construction
+        if (sl == Int.MaxValue) st.end() else days.foreach(st.step)
+        st.events.iterator
     }(Encoders.product[FacEvent])
   }
 
-  /** Reverse-chronological cumulation over a type's sparse roll events —
-    * the identical fold [[scanReduced]] runs, lifted off the day axis:
-    * events merge per date (a secondary roll sharing a main-roll date
-    * shares the row, keeping the main roll's old-main id exactly like
-    * the serial scan's same-date merge — both events of a date always
-    * come from the same day iteration, so date-grouping ≡ the serial
-    * adjacency merge), the neutral last row replaces any event on the
-    * final date, and factors cumulate date-descending with the same
-    * operand order as the serial scan (bit-exact). */
+  /** The factor fold: reverse-chronological cumulation over a type's
+    * roll events, returning the factor rows by epoch day,
+    * date-ascending. Events merge per date (a secondary roll sharing a
+    * main-roll date shares its row and keeps the old main's id; both
+    * come from the same [[RollScan.step]]), the neutral last row
+    * replaces any event on the final date, and factors cumulate
+    * date-descending through [[Method.combine]]. */
   private def cumulateEvents(t: String, evs: Seq[FacEvent],
-      method: Method): Seq[FactorRow] = {
-    evs.find(_.kind == 2) match {
-      case None => Seq.empty // no candidate-bearing day / null final main
-      case Some(sent) =>
-        val lastDate = sent.date
-        val rows: Seq[(Int, String, Option[Double], Option[String], Option[Double])] =
-          evs.filter(_.kind < 2).groupBy(_.date).toSeq.flatMap { case (d, es) =>
-            (es.find(_.kind == 0), es.find(_.kind == 1)) match {
-              case (Some(me), Some(se)) =>
-                Seq((d, me.mainId, Some(me.value), Some(se.secId), Some(se.value)))
-              case (Some(me), None) => Seq((d, me.mainId, Some(me.value), None, None))
-              case (None, Some(se)) =>
-                Seq((d, se.mainId, None, Some(se.secId), Some(se.value)))
-              case _ => Seq.empty
-            }
-          }
-        val lastRows: Seq[(Int, String, Option[Double], Option[String], Option[Double])] =
-          Seq((lastDate, sent.mainId, Some(method.neutral),
-            Option(sent.secId), Some(method.neutral)))
-        val raw = (rows.filterNot(_._1 == lastDate) ++ lastRows).sortBy(-_._1)
-        var accM = method.neutral
-        var accS = method.neutral
-        var lastSecId: Option[String] = None
-        raw.map { case (d, mainId, fM, secId, fS) =>
-          accM = method match {
-            case Division => accM * fM.getOrElse(1.0)
-            case Diff => accM + fM.getOrElse(0.0)
-          }
-          accS = method match {
-            case Division => accS * fS.getOrElse(1.0)
-            case Diff => accS + fS.getOrElse(0.0)
-          }
-          lastSecId = secId.orElse(lastSecId)
-          (d, FactorRow(t, toSqlDate(d), mainId, accM, lastSecId.orNull, accS))
-        }.sortBy(_._1).map(_._2)
+      method: Method): Seq[(Int, FactorRow)] =
+    evs.find(_.kind == 2).toSeq.flatMap { sentinel => // none: no selected day
+      val rolls = evs.filter(e => e.kind < 2 && e.date != sentinel.date).groupBy(_.date)
+        .toSeq.map { case (d, es) =>
+          val m = es.find(_.kind == 0)
+          val s = es.find(_.kind == 1)
+          (d, m.getOrElse(s.get).mainId, m.map(_.value), s.map(_.secId), s.map(_.value))
+        }
+      val last = (sentinel.date, sentinel.mainId, Some(method.neutral),
+        Option(sentinel.secId), Some(method.neutral))
+      var accM = method.neutral
+      var accS = method.neutral
+      var secId: Option[String] = None
+      (rolls :+ last).sortBy(-_._1).map { case (d, mainId, fM, sId, fS) =>
+        accM = method.combine(accM, fM.getOrElse(method.neutral))
+        accS = method.combine(accS, fS.getOrElse(method.neutral))
+        secId = sId.orElse(secId)
+        (d, FactorRow(t, toSqlDate(d), mainId, accM, secId.orNull, accS))
+      }.reverse
     }
-  }
 
   /** The continuous series of one type from its scan: for each
     * selected day, one row per bar row of the main contract (duplicate
     * bars give duplicate rows, a null close stays null), with the
     * earliest factor dated on or after the day, since a factor covers
-    * every day up to its roll date. `close_adj` is the same double op the
-    * join form ran: `close + adj` or `close * adj`, with the neutral
-    * factor where no factor follows the day. */
+    * every day up to its roll date. `close_adj` is
+    * `method.combine(close, factor)`, with the neutral factor where no
+    * factor follows the day. */
   private def emitSeries(mains: Seq[(DayFull, String)], facs: Seq[(Int, FactorRow)],
       method: Method): Iterator[SeriesRow] = {
     val ahead = facs.iterator.buffered
@@ -575,11 +527,7 @@ object ContinuousFutures {
       val date = toSqlDate(day.trade_date)
       for (c <- day.closes; if c.id == main) {
         val closeAdj: java.lang.Double =
-          if (c.close == null) null
-          else method match {
-            case Division => c.close.doubleValue * factor
-            case Diff => c.close.doubleValue + factor
-          }
+          if (c.close == null) null else method.combine(c.close.doubleValue, factor)
         out += SeriesRow(day.instrument_type, date, main, c.close, adj, closeAdj)
       }
     }

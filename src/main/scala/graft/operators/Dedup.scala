@@ -14,21 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Dev-only phase timing (SPARK_GRAFT_DEDUP_TIMING=1): brackets the
-    * pipeline's internal actions so a bench regression can be
-    * attributed to a stage instead of a query total. Zero cost when
-    * unset. */
-  private val timingOn = sys.env.get("SPARK_GRAFT_DEDUP_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T =
-    if (!timingOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[dedup-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Exact dedup: keep the lowest-id document per normalized-content
     * fingerprint. One shuffle on the 64-bit fingerprint. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -536,12 +521,12 @@ object Dedup {
       // independent, so the walk's probes are shared across every
       // budget tier a session runs (dd_minhash_budget_mid/_floor and
       // the shared default all walk the same shapes)
-      val hist = timed(s"probe hist r=$r b=$b")(bandHistOf(rs, r * b, b))
+      val hist = bandHistOf(rs, r * b, b)
       lastHist = hist
       val cap = autoBucketCapFromHist(hist, minOutlierBucket, outlierGapRatio)
       ((r, b), cap, cappedMassFromHist(hist, cap))
     }.find(_._3 <= budget)
-    val out = probed match {
+    probed match {
       case Some(((r, b), cap, _)) =>
         // reuse the measured cap — re-deriving it inside the pair
         // pipeline would repeat the histogram pass for the same answer
@@ -562,8 +547,6 @@ object Dedup {
         pairsFromRepSpace(rs, r * b, b, jaccardThreshold,
           Left(budgetCapFromHist(lastHist, budget)))
     }
-    rs.release()
-    out
   }
 
   /** Ascending (bucket size, bucket count) histogram of a banded frame —
@@ -697,19 +680,13 @@ object Dedup {
 
   /** Shared rep-space state of the identity collapse: the rep→member
     * map and the fused per-representative (signature, shingles) cache,
-    * both persisted, plus the rep count (already materialized by the
-    * collapse — lets consumers make broadcast decisions without a new
-    * job). `release()` after the consuming pair frames are
-    * materialized.
+    * both scratch parquet, plus the rep count (already materialized by
+    * the collapse — lets consumers make broadcast decisions without a
+    * new job). Owned by the session memo ([[repSpaceMemo]]); the
+    * JVM-exit scratch sweep releases it.
     */
   private case class RepSpace(members: DataFrame, perDoc: DataFrame,
       nReps: Long, shingleBytes: Long, sigWidth: Int) {
-    /** No-op since r16: rep spaces are scratch-parquet-backed and owned
-      * by the session memo ([[repSpaceMemo]]) — the JVM-exit scratch
-      * sweep is the release point. Kept so call sites still mark where
-      * their use of the shared space ends. */
-    def release(): Unit = ()
-
     /** Driver-built sorted-id lookup of the model-sized rep tables,
       * built AT MOST ONCE per rep space (lazy, session-cached with the
       * memo) and broadcast to executors. est and verify probe it from
@@ -729,9 +706,8 @@ object Dedup {
           nReps * sigWidth * 8L > (1L << 30) ||
           shingleBytes > (2L << 30)) None
       else {
-        val rows = timed("pairs: lookup collect")(
-          perDoc.select(col("__id"), col("minhash_sig"), col("__sh"))
-            .collect())
+        val rows = perDoc.select(col("__id"), col("minhash_sig"), col("__sh"))
+          .collect()
         java.util.Arrays.sort(rows,
           java.util.Comparator.comparingLong(
             (r: org.apache.spark.sql.Row) => r.getLong(0)))
@@ -832,9 +808,7 @@ object Dedup {
       shingleLen: Int, numHashes: Int, bands: Int,
       jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)]): DataFrame = {
     val rs = collapseToReps(docs, idCol, textCol, shingleLen, numHashes)
-    val out = pairsFromRepSpace(rs, numHashes, bands, jaccardThreshold, capSpec)
-    rs.release()
-    out
+    pairsFromRepSpace(rs, numHashes, bands, jaccardThreshold, capSpec)
   }
 
   /** Several LSH operating points over ONE shared identity collapse and
@@ -863,11 +837,9 @@ object Dedup {
       "one stays persisted for the session's life")
     val maxHashes = settings.map(_._2).max
     val rs = collapseToReps(docs, idCol, textCol, shingleLen, maxHashes)
-    val out = settings.map { case (label, nh, b, cap) =>
+    settings.map { case (label, nh, b, cap) =>
       label -> pairsFromRepSpace(rs, nh, b, jaccardThreshold, cap)
     }.toMap
-    rs.release()
-    out
   }
 
   private def collapseToReps(docs: DataFrame, idCol: String, textCol: String,
@@ -925,23 +897,22 @@ object Dedup {
     // asymmetric ingest path ([[minHashAgainstIndexCore]]) matches
     // identical texts ACROSS the batch/index boundary on it; the
     // within-corpus consumers simply never select it.
-    val members = timed("collapse: members write")(graft.core.Scratch.materialize(
+    val members = graft.core.Scratch.materialize(
       withNorm.select(col("__k"), col("__id"))
         .join(reps.select(col("__k"), col("__rid")), Seq("__k"))
         .select(col("__k"), col("__rid"), col("__id")),
-      "mh_members", memoKey))
-    val perDoc = timed("collapse: perDoc write")(graft.core.Scratch.materialize(
+      "mh_members", memoKey)
+    val perDoc = graft.core.Scratch.materialize(
       reps
         .select(col("__rid").as("__id"), col("__k"),
           sigAndHashedShingles(shingleLen, numHashes)(col("__norm")).as("__c"))
         .select(col("__id"), col("__k"),
           col("__c._1").as("minhash_sig"), col("__c._2").as("__sh")),
-      "mh_perdoc", s"$memoKey|$numHashes"))
+      "mh_perdoc", s"$memoKey|$numHashes")
     // One aggregate over the written table measures the shingle payload
     // (long count × 8) so downstream join-vs-broadcast staging decisions
     // cost no extra job.
-    val stats = timed("collapse: stats agg")(
-      perDoc.agg(count(lit(1)), sum(size(col("__sh")))).head())
+    val stats = perDoc.agg(count(lit(1)), sum(size(col("__sh")))).head()
     val nReps = stats.getLong(0)
     val shingleBytes = (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 8L
     reps.unpersist()
@@ -955,8 +926,8 @@ object Dedup {
     * band the signature PREFIX of width `numHashes`, cap mega-buckets,
     * estimate-prefilter, verify with exact hashed-shingle Jaccard, and
     * fan the verified rep pairs back out to member pairs. Returns a
-    * persisted, materialized pair frame; does NOT release the shared
-    * rep-space caches (the caller owns them — see
+    * persisted, materialized pair frame; the rep space stays in the
+    * session memo for the other operating points (see
     * [[minHashDupPairsMulti]]).
     */
   private def pairsFromRepSpace(rs: RepSpace, numHashes: Int, bands: Int,
@@ -990,9 +961,8 @@ object Dedup {
       case Right((minOutlier, gapRatio)) =>
         // derive from the memoized per-shape histogram (identical to
         // autoBucketCap(banded0, ...): banded0 IS this shape's banding)
-        timed(s"pairs: autoBucketCap nh=$numHashes")(
-          autoBucketCapFromHist(bandHistOf(rs, numHashes, bands),
-            minOutlier, gapRatio))
+        autoBucketCapFromHist(bandHistOf(rs, numHashes, bands),
+          minOutlier, gapRatio)
     }
     val bucketSizes = banded0.groupBy(col("band"), col("band_hash"))
       .agg(count(lit(1)).as("__n"))
@@ -1244,11 +1214,9 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
     // The verified pair set is tiny next to the per-doc cache; pin and
-    // materialize it before the caller releases the rep-space caches —
-    // otherwise the lazy pair DAG would recompute the whole collapse.
+    // materialize it so its consumers do not re-run the lazy pair DAG.
     val out = crossPairs.unionByName(samePairs).persist()
-    timed(s"pairs: full pipeline nh=$numHashes b=$bands cap=$maxBucketSize")(
-      out.count())
+    out.count()
     out
   }
 
@@ -1734,10 +1702,8 @@ object Dedup {
         Seq("index_rid"))
       .select(col("new_id"), col("index_id"), col("jaccard"))
     val out = crossPairs.unionByName(samePairs).persist()
-    timed(s"against-index: full pipeline nh=$numHashes b=$bands " +
-      s"cap=$maxBucketSize")(out.count())
+    out.count()
     bucketN.unpersist()
-    iRs.release(); bRs.release()
     out
   }
 

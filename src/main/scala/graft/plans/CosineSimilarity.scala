@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,8 +83,12 @@ object CosineSimilarity {
   val name = "graft_cosine_similarity"
 
   /** Make the expression callable via `call_function(name, …)` / SQL in
-    * this session (public FunctionRegistry API — no private bridges). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    * this session (public FunctionRegistry API — no private bridges).
+    * Registers only when absent, so a repeat call keeps the entry. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(
+        name, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+  }
 }

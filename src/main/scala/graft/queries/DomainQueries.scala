@@ -133,11 +133,8 @@ object DomainQueries {
     new graft.core.BoundedMemo[(SparkSession, String), DataFrame](8)
   private def futuresBarsCached(s: SparkSession, d: String): DataFrame = {
     barsCache.evictIf((k, _) => k._1.sparkContext.isStopped)
-    barsCache.getOrElseUpdate((s, d), {
-      val path = graft.core.Scratch.path("bars", d)
-      futuresBars(s, d).write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    })
+    barsCache.getOrElseUpdate((s, d),
+      graft.core.Scratch.materialize(futuresBars(s, d), "bars", d))
   }
 
   val queries: Map[String, Q] = Map(
@@ -845,7 +842,7 @@ object DomainQueries {
     }))
 
   /** Shared DuckDB CTE replaying the D1 dominant/secondary selection
-    * state machine (ContinuousFutures.scanType) exactly, ending in
+    * state machine (ContinuousFutures.advanceDay) exactly, ending in
     * `sel(itype, d, m, s)` — the per-day selection series — and
     * `closes(itype, iid, d, close)`.
     *

@@ -669,17 +669,6 @@ object TextQueries {
     // permanent dedup hole.
     "e2e_corpus_curation" -> ((s, d) => {
       import graft.core.{TableSpec, TableStore}
-      // dev-only phase timing, same switch as Dedup's
-      val tOn = sys.env.get("SPARK_GRAFT_DEDUP_TIMING").contains("1")
-      def tt[T](label: String)(f: => T): T =
-        if (!tOn) f
-        else {
-          val t0 = System.nanoTime()
-          val r = f
-          System.err.println(
-            f"[e2e-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        }
       val dir = graft.core.Scratch.queryDir("e2e_curation")
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -697,17 +686,17 @@ object TextQueries {
       // and the three drops (run1, crash, recovery) were each
       // re-running the full canonicalize+group chain on their slice.
       // One ledger snapshot, one frontier, three slices.
-      val frontier = tt("frontier build")(graft.core.Scratch.materialize(
+      val frontier = graft.core.Scratch.materialize(
         graft.operators.UrlOps
           .dedupByCanonicalUrl(Tables.scatter(urlLedger(s, d)), "url", "cid")
           .select(pmod(col("keep_id"), lit(1000000L)).as("doc_id"), col("n_urls"))
           .groupBy("doc_id").agg(sum("n_urls").as("n_urls")),
-        "e2e_cur_frontier", d))
+        "e2e_cur_frontier", d)
 
       // One crawl drop = the frontier slice whose docs belong to `pred`.
       // Returns the number of docs actually fetched (post anti-join).
       def runDrop(tag: String, pred: org.apache.spark.sql.Column,
-          crashBetweenChunk: Int): Long = tt(s"drop $tag") {
+          crashBetweenChunk: Int): Long = {
         val perDoc = frontier.filter(pred === pmod(col("doc_id"), lit(2)))
         // J4: docs already in the sink are not re-fetched — the
         // idempotence the recovery run rides
@@ -723,12 +712,11 @@ object TextQueries {
         // equals the frontier count — every frontier doc_id is a
         // documents PK by construction (ids are pmod(cid, 1e6) of cids
         // minted from doc_ids).
-        val batch0 = tt(s"drop $tag: fetch batch write")(
-          graft.core.Scratch.materialize(
-            newDocs.join(
-              Tables.documents(s, d).select(col("doc_id"), col("source"), col("text")),
-              Seq("doc_id")),
-            s"e2e_cur_b0_$tag", d))
+        val batch0 = graft.core.Scratch.materialize(
+          newDocs.join(
+            Tables.documents(s, d).select(col("doc_id"), col("source"), col("text")),
+            Seq("doc_id")),
+          s"e2e_cur_b0_$tag", d)
         val n = batch0.count()
         // quality gate (Gopher repetition rule) rides as a STORED flag:
         // rejected docs are remembered, so recovery never re-fetches
@@ -741,8 +729,7 @@ object TextQueries {
         // and PERSISTED with the row — every later drop reads them as
         // its index side instead of re-hashing previously ingested
         // text (the incremental-index shape minHashSigTable documents)
-        val batch = tt(s"drop $tag: batch score+sig write")(
-          graft.core.Scratch.materialize(
+        val batch = graft.core.Scratch.materialize(
           batch0.join(gate, Seq("doc_id"))
             .withColumn("__toks", tokens(col("text")))
             .withColumn("__ltoks", tokens(lower(col("text"))))
@@ -752,7 +739,7 @@ object TextQueries {
               tokenCountOf(col("__toks")).cast("long").as("n_tokens"),
               col("keep"), col("__c._1").as("minhash_sig"),
               col("__c._2").as("shingles")),
-          s"e2e_cur_batch_$tag", d))
+          s"e2e_cur_batch_$tag", d)
         // Near-dup pairs for the WHOLE drop, committed BEFORE any doc
         // chunk: within-drop pairs + drop-vs-index pairs cover exactly
         // the pairs this drop adds, and committing them first means a
@@ -776,17 +763,15 @@ object TextQueries {
         // the upsert reads the cache instead of recomputing the pair
         // pipeline for the partitions isEmpty never touched
         val pairs = within.unionByName(cross).persist()
-        val nPairs = tt(s"drop $tag: pairs compute")(pairs.count())
-        tt(s"drop $tag: pairs upsert")(
-          if (nPairs > 0) store.upsert(pairSpec, pairs))
+        val nPairs = pairs.count()
+        if (nPairs > 0) store.upsert(pairSpec, pairs)
         pairs.unpersist()
         // the reference's bunch-insert batching: docs commit in chunks
         // so a crash preserves partial progress
         // chunk on doc_id div 2 so BOTH parity drops split non-trivially
         (0 until 2).foreach { i =>
           val chunk = batch.filter(pmod(expr("doc_id div 2"), lit(2)) === i)
-          tt(s"drop $tag: doc chunk $i upsert")(
-            if (!chunk.isEmpty) store.upsert(docSpec, chunk))
+          if (!chunk.isEmpty) store.upsert(docSpec, chunk)
           if (i == crashBetweenChunk)
             throw new RuntimeException(
               "injected crash: drop pairs + first doc chunk committed, rest lost")

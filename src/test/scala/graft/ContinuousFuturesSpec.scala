@@ -122,8 +122,8 @@ class ContinuousFuturesSpec extends AnyFunSuite with SharedSpark {
       val bars = randomBars(seed)
       def key(r: org.apache.spark.sql.Row) =
         (r.getString(0), r.getDate(1).toString, r.getString(2),
-          math.rint(r.getDouble(3) * 1e9), Option(r.getString(4)),
-          math.rint(r.getDouble(5) * 1e9))
+          java.lang.Double.doubleToLongBits(r.getDouble(3)), Option(r.getString(4)),
+          java.lang.Double.doubleToLongBits(r.getDouble(5)))
       val got = ContinuousFutures.adjFactors(spark, bars, method)
         .collect().map(key).sortBy(x => (x._1, x._2))
       val want = ContinuousFuturesOracles.legacyScan(spark, bars, method)._2
@@ -149,6 +149,61 @@ class ContinuousFuturesSpec extends AnyFunSuite with SharedSpark {
       assert(got.toSeq == want.toSeq, s"seed=$seed method=$method not bit-identical")
       assert(got.nonEmpty)
     }
+  }
+
+  /** Hand-built roll edge cases, one instrument type each, over three
+    * days and contracts A, B, C expiring in that order. Day 1 selects
+    * main A and secondary B; day 2 rolls the main A→B, which drops the
+    * secondary B, and C becomes the secondary; day 3 rolls nothing. Both
+    * rolls are priced at day 1's closes:
+    *  - ZA: the main roll is priced at a zero old-main close (8 / 0 is
+    *    ∞ and is dropped); the secondary roll (10 / 8) still gives a
+    *    row, carrying the new main's id B;
+    *  - ZB: both rolls are priced and merge into one row that keeps the
+    *    old main's id A. */
+  private def rollEdgeBars: DataFrame = {
+    import spark.implicits._
+    val days = Seq("2021-03-01", "2021-03-02", "2021-03-03")
+    val maturity = Map("A" -> "2021-06-15", "B" -> "2021-09-15", "C" -> "2021-12-15")
+    Seq(
+      // (type, id, day, close, switch_by)
+      ("ZA", "A", 0, 0.0, 100.0), ("ZA", "B", 0, 8.0, 50.0), ("ZA", "C", 0, 10.0, 10.0),
+      ("ZA", "A", 1, 1.0, 100.0), ("ZA", "B", 1, 9.0, 200.0), ("ZA", "C", 1, 11.0, 150.0),
+      ("ZA", "B", 2, 9.5, 200.0), ("ZA", "C", 2, 11.5, 150.0),
+      ("ZB", "A", 0, 10.0, 100.0), ("ZB", "B", 0, 12.0, 50.0), ("ZB", "C", 0, 15.0, 10.0),
+      ("ZB", "A", 1, 11.0, 100.0), ("ZB", "B", 1, 13.0, 200.0), ("ZB", "C", 1, 16.0, 150.0),
+      ("ZB", "B", 2, 14.0, 200.0), ("ZB", "C", 2, 17.0, 150.0)
+    ).map { case (t, id, day, close, vol) =>
+      (t, id, d(days(day)), close, vol, d(maturity(id)))
+    }.toDF("instrument_type", "instrument_id", "trade_date", "close", "switch_by", "last_trade_date")
+  }
+
+  test("roll edge cases: an unpriceable main roll, a same-day main + secondary roll") {
+    val bars = rollEdgeBars
+    // doubles compare by their bits (boxed Double equality)
+    def factorRows(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getString(2), r.getDouble(3),
+        r.getString(4), r.getDouble(5)))
+      .sortBy(r => (r._1, r._2))
+    val want = Seq(
+      ("ZA", "2021-03-01", "B", 1.0, "B", 10.0 / 8.0),
+      ("ZA", "2021-03-03", "B", 1.0, "C", 1.0),
+      ("ZB", "2021-03-01", "A", 12.0 / 10.0, "B", 15.0 / 12.0),
+      ("ZB", "2021-03-03", "B", 1.0, "C", 1.0))
+    assert(factorRows(ContinuousFutures.adjFactors(spark, bars, Division)) == want)
+    assert(factorRows(ContinuousFuturesOracles.legacyScan(spark, bars, Division)._2) == want)
+    val series = ContinuousFutures.continuousSeries(spark, bars, Division)
+    val applied = try series.collect().toSeq
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getString(2), r.getDouble(4),
+        r.getDouble(5)))
+      .sortBy(r => (r._1, r._2)) finally series.unpersist()
+    assert(applied == Seq(
+      ("ZA", "2021-03-01", "A", 1.0, 0.0),
+      ("ZA", "2021-03-02", "B", 1.0, 9.0),
+      ("ZA", "2021-03-03", "B", 1.0, 9.5),
+      ("ZB", "2021-03-01", "A", 12.0 / 10.0, 10.0 * (12.0 / 10.0)),
+      ("ZB", "2021-03-02", "B", 1.0, 13.0),
+      ("ZB", "2021-03-03", "B", 1.0, 14.0)))
   }
 
   /** [[randomBars]] plus the rows the series must carry through as the

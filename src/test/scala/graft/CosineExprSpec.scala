@@ -29,4 +29,16 @@ class CosineExprSpec extends AnyFunSuite with SharedSpark {
     val got = df.select(VectorFunctions.cosine($"a", $"b").as("c"), $"want").collect()
     got.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
   }
+
+  test("Tables.load registers graft's functions once per session") {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(graft.plans.CosineSimilarity.name)
+    def entry() = (registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    core.Tables.load(spark, "/root/testdata/sf0.001", "region")
+    val (info0, builder0) = entry()
+    core.Tables.load(spark, "/root/testdata/sf0.001", "nation")
+    val (info1, builder1) = entry()
+    assert(info1 eq info0, "the second load replaced the registered function")
+    assert(builder1 eq builder0, "the second load replaced the function builder")
+  }
 }
