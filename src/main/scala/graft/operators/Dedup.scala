@@ -371,7 +371,24 @@ object Dedup {
     }
   }
 
-  /** Jaccard of two sorted distinct long arrays via two-pointer merge.
+  /** Jaccard of two sorted distinct long arrays via two-pointer merge —
+    * the one Jaccard body of the MinHash family: [[jaccardOfSortedLongs]]
+    * and the lookup probe of [[verifyPairs]] call it, and the fused
+    * bucket loop of [[pairsFromRepSpace]] must equal its arithmetic.
+    * Two empty sets score 0.0. */
+  private def sortedJaccard(a: Array[Long], b: Array[Long]): Double = {
+    var i = 0; var j = 0; var inter = 0
+    while (i < a.length && j < b.length) {
+      val x = a(i); val y = b(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    val union = a.length + b.length - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
+
+  /** [[sortedJaccard]] as a null-safe UDF (a null side scores 0.0).
     * Parameters are primitive `Array[Long]`, not `Seq[Long]`: Spark
     * converts `UnsafeArrayData` to a primitive array in one copy, and
     * positional access stays O(1) — a `Seq` parameter can arrive as a
@@ -379,35 +396,29 @@ object Dedup {
     */
   val jaccardOfSortedLongs: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (a: Array[Long], b: Array[Long]) =>
-      if (a == null || b == null || (a.isEmpty && b.isEmpty)) 0.0
-      else {
-        var i = 0; var j = 0; var inter = 0
-        while (i < a.length && j < b.length) {
-          val x = a(i); val y = b(j)
-          if (x == y) { inter += 1; i += 1; j += 1 }
-          else if (x < y) i += 1
-          else j += 1
-        }
-        val union = a.length + b.length - inter
-        if (union == 0) 0.0 else inter.toDouble / union
-      }
+      if (a == null || b == null) 0.0 else sortedJaccard(a, b)
     }
 
   /** MinHash-LSH near-dup pairs, staged for scale:
-    *  1. ONE fused corpus pass → (signature, hashed shingle set),
-    *     persisted — every later stage column-prunes from this cache
-    *     instead of re-reading and re-hashing the text;
-    *  2. band the signatures, self-join buckets on ids ONLY (the narrow
+    *  1. ONE fused corpus pass → (signature, hashed shingle set) per
+    *     distinct normalized text, persisted — every later stage
+    *     column-prunes from this cache instead of re-reading and
+    *     re-hashing the text;
+    *  2. band the signature prefix ([[bandsOfSigs]]) and drop
+    *     mega-buckets ([[capBands]]): buckets carry ids ONLY (the narrow
     *     shuffle — never drag shingle arrays through the bucket join);
-    *  3. dedup candidate pairs;
-    *  4. cheap prefilter: estimated Jaccard = fraction of equal
-    *     signature components (16 long comparisons/pair) — note a pair
-    *     sharing one of `bands` bands already has est ≥ rowsPerBand /
-    *     numHashes, so this only prunes when the threshold exceeds that;
-    *  5. exact hashed-shingle Jaccard only for survivors, via id-joins
-    *     back to the (broadcastable) per-doc table.
-    * On a 1000-executor cluster the bucket join shuffles ~16 bytes/row
-    * per band; shingle arrays move only for the tiny verified tail.
+    *  3. cheap prefilter: estimated Jaccard = fraction of equal
+    *     components of the `numHashes` prefix — note a pair sharing one
+    *     of `bands` bands already has est ≥ rowsPerBand / numHashes, so
+    *     this only prunes when τ − 0.25 exceeds that;
+    *  4. exact hashed-shingle Jaccard only for survivors.
+    * When the rep tables fit the broadcast-lookup bounds (long ids),
+    * steps 2-4 run as one bucket-local loop with no candidate rows;
+    * otherwise the candidate pairs go through the shared staged verify
+    * ([[verifyPairs]]). Both give the same pair set and the same
+    * jaccard bits. On a 1000-executor cluster the bucket join shuffles
+    * ~16 bytes/row per band; shingle arrays move only for the tiny
+    * verified tail.
     */
   def minHashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 5, numHashes: Int = 16, bands: Int = 4,
@@ -556,8 +567,7 @@ object Dedup {
     * bucket size, so the collect is bounded like the calibration
     * histograms. */
   private def bucketHistogram(banded0: DataFrame): Array[(Long, Long)] =
-    sortedHist(banded0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
+    sortedHist(bucketSizes(banded0)
       .groupBy(col("__n")).agg(count(lit(1)).as("__m")))
 
   /** Collect a model-sized `(__n, __m)` histogram, one row per distinct
@@ -687,55 +697,75 @@ object Dedup {
     */
   private case class RepSpace(members: DataFrame, perDoc: DataFrame,
       nReps: Long, shingleBytes: Long, sigWidth: Int) {
-    /** Driver-built sorted-id lookup of the model-sized rep tables,
-      * built AT MOST ONCE per rep space (lazy, session-cached with the
-      * memo) and broadcast to executors. est and verify probe it from
-      * inside their UDFs, so the candidate stream stays 16 bytes/row
-      * end to end; the broadcast-JOIN form materialized two sig arrays
-      * and two shingle arrays into every candidate row (measured at
-      * sf0.1: 3.9 M capped candidates × ~2.6 KB of attached arrays ≈
-      * 10 GB of UnsafeRow writes + copies — the est+verify joins were
-      * nearly the whole 16.7 s budgeted-pipeline wall). Same memory
-      * class as the old `broadcast(sigs)` hint (the driver builds that
-      * relation anyway); the payload bounds below are unchanged, and
-      * bigger-than-bound corpora (or non-long ids) keep the join form.
+    /** Driver-built sorted-id lookup of the model-sized rep tables
+      * ([[lookupOf]]), built AT MOST ONCE per rep space (lazy,
+      * session-cached with the memo) and broadcast to executors. The
+      * fused bucket loop and the probe verify read it from inside their
+      * closures, so the candidate stream stays 16 bytes/row end to end;
+      * the broadcast-JOIN form materialized two sig arrays and two
+      * shingle arrays into every candidate row (measured at sf0.1: 3.9 M
+      * capped candidates × ~2.6 KB of attached arrays ≈ 10 GB of
+      * UnsafeRow writes + copies — the est+verify joins were nearly the
+      * whole 16.7 s budgeted-pipeline wall). Bigger-than-bound corpora
+      * (or non-long ids) keep the staged join form of [[verifyPairs]].
       */
     lazy val lookup: Option[org.apache.spark.broadcast.Broadcast[RepLookup]] =
-      if (perDoc.schema("__id").dataType !=
-            org.apache.spark.sql.types.LongType ||
-          nReps * sigWidth * 8L > (1L << 30) ||
-          shingleBytes > (2L << 30)) None
-      else {
-        val rows = perDoc.select(col("__id"), col("minhash_sig"), col("__sh"))
-          .collect()
-        java.util.Arrays.sort(rows,
-          java.util.Comparator.comparingLong(
-            (r: org.apache.spark.sql.Row) => r.getLong(0)))
-        val n = rows.length
-        val ids = new Array[Long](n)
-        val sg = new Array[Array[Long]](n)
-        val sh = new Array[Array[Long]](n)
-        var i = 0
-        while (i < n) {
-          val r = rows(i)
-          ids(i) = r.getLong(0)
-          sg(i) = r.getSeq[Long](1).toArray
-          sh(i) = r.getSeq[Long](2).toArray
-          i += 1
-        }
-        Some(perDoc.sparkSession.sparkContext.broadcast(
-          new RepLookup(ids, sg, sh)))
-      }
+      lookupOf(perDoc, nReps * sigWidth * 8L, shingleBytes)
+
+    /** The rep table as one side of [[verifyPairs]]. */
+    def side: VerifySide = VerifySide(perDoc, nReps, shingleBytes, lookup)
   }
 
-  /** Broadcast payload of [[RepSpace.lookup]]: rep ids (sorted), full-
-    * width signatures, sorted hashed-shingle sets — positional, probed
-    * by binary search. */
+  /** Broadcast payload of [[lookupOf]]: ids (sorted), full-width
+    * signatures, sorted hashed-shingle sets — positional, probed by
+    * binary search. */
   private[operators] final class RepLookup(val ids: Array[Long],
       val sigs: Array[Array[Long]], val shs: Array[Array[Long]])
       extends Serializable {
     def idx(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
   }
+
+  /** The one lookup builder of the MinHash family: collect an
+    * (__id, minhash_sig, __sh) table, sort it by id and broadcast it as
+    * a [[RepLookup]] — or None when the ids are not long or the
+    * measured payload passes the bounds (1 GiB of signatures, 2 GiB of
+    * shingles). Both bounds are raw PAYLOAD bytes; Spark holds a
+    * broadcast deserialized on the driver and every executor with 2-4x
+    * object overhead, so they assume ≥ ~8-16 GB heaps (size them to
+    * ~1/16 of the smallest heap when porting). Its owners cache the
+    * result: [[RepSpace.lookup]] per rep space, [[sigLookupMemo]] per
+    * signature-table plan. */
+  private def lookupOf(table: DataFrame, sigBytes: Long, shBytes: Long)
+      : Option[org.apache.spark.broadcast.Broadcast[RepLookup]] =
+    if (table.schema("__id").dataType != org.apache.spark.sql.types.LongType ||
+        sigBytes > (1L << 30) || shBytes > (2L << 30)) None
+    else {
+      val rows = table.select(col("__id"), col("minhash_sig"), col("__sh"))
+        .collect()
+      java.util.Arrays.sort(rows,
+        java.util.Comparator.comparingLong(
+          (r: org.apache.spark.sql.Row) => r.getLong(0)))
+      val n = rows.length
+      val ids = new Array[Long](n)
+      val sg = new Array[Array[Long]](n)
+      val sh = new Array[Array[Long]](n)
+      var i = 0
+      while (i < n) {
+        val r = rows(i)
+        ids(i) = r.getLong(0)
+        sg(i) = r.getSeq[Long](1).toArray
+        sh(i) = r.getSeq[Long](2).toArray
+        i += 1
+      }
+      Some(table.sparkSession.sparkContext.broadcast(new RepLookup(ids, sg, sh)))
+    }
+
+  /** One side of a MinHash pair verify: an (__id, minhash_sig, __sh)
+    * table, its measured row count and shingle payload bytes, and its
+    * [[lookupOf]] broadcast when it has one. */
+  private final case class VerifySide(table: DataFrame, rows: Long,
+      shingleBytes: Long,
+      lookup: Option[org.apache.spark.broadcast.Broadcast[RepLookup]])
 
   /** Session memo of collapsed rep spaces, keyed by the input plan —
     * the operator-layer twin of the query-layer scratch sharing
@@ -783,26 +813,6 @@ object Dedup {
   private val massHistMemo =
     new graft.core.BoundedMemo[(RepSpace, RepSpace, Int, Int, Int),
       Array[(Long, Long)]](16)
-
-  /** Count of equal positions of two equal-length long arrays — the
-    * signature-estimate kernel, fused (zip_with/filter/size run
-    * interpreted per element; at tens of millions of candidates the
-    * Column form dominated the whole pair join). */
-  private val sigEqCount: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Array[Long], b: Array[Long]) =>
-      // null-safe like the zip_with/filter/size Column form it replaced:
-      // est 0 never passes the cutoff, matching the old null→filtered
-      // semantics (all current call sites inner-join non-null sig
-      // tables, but a nullable minhash_sig column must not NPE)
-      if (a == null || b == null) 0
-      else {
-        var i = 0
-        var eq = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-        eq
-      }
-    }
 
   private def minHashPairsCore(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int, numHashes: Int, bands: Int,
@@ -932,25 +942,17 @@ object Dedup {
     */
   private def pairsFromRepSpace(rs: RepSpace, numHashes: Int, bands: Int,
       jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)]): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes — a remainder would " +
-      "silently drop trailing signature components and lower recall")
     require(jaccardThreshold > 0,
       "threshold must be positive — the identity collapse emits " +
       "same-text pairs at jaccard 1.0 and null-text docs never pair, " +
       "which matches the uncollapsed semantics only for τ > 0")
-    val rowsPerBand = numHashes / bands
     val members = rs.members
     // Prefix slice: component k is min over shingles of the k-th
     // independent permutation regardless of the total width, so a
     // narrower setting's signature is exactly the wider cache's prefix.
     val sigs = rs.perDoc.select(col("__id"),
       slice(col("minhash_sig"), 1, numHashes).as("minhash_sig"))
-    val banded0 = sigs.select(col("__id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(slice(col("minhash_sig"), b * rowsPerBand + 1, rowsPerBand)
-          .cast("array<string>").cast("string"))
-      }: _*)).as(Seq("band", "band_hash")))
+    val banded0 = bandsOfSigs(sigs, numHashes, bands)
     // Degenerate mega-buckets (a band hash shared by a large fraction of
     // the corpus) are noise, not signal: they quadratically explode the
     // candidate join while contributing almost no true near-dups. Cap
@@ -964,51 +966,6 @@ object Dedup {
         autoBucketCapFromHist(bandHistOf(rs, numHashes, bands),
           minOutlier, gapRatio)
     }
-    val bucketSizes = banded0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucketSize)
-      .drop("__n")
-    val banded = banded0.join(bucketSizes, Seq("band", "band_hash"), "left_semi")
-    val candRaw = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
-      .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // signature-estimate prefilter (slightly permissive vs the exact
-    // threshold so borderline true pairs survive to verification).
-    // The rep sig table is model-sized on any collapsed corpus; when it
-    // fits a 1 GB broadcast budget (well under Spark's 8 GB broadcast
-    // cap — ~1 M reps at 138 components), ship it to the candidates AND
-    // run the estimate as a MAP-ONLY filter over the raw (still
-    // band-duplicated) candidate stream, deduplicating only the
-    // survivors: the alternative — dedup first, then est via joins —
-    // sorts the FULL candidate mass (a 476 M-row sort at sf10-mutated
-    // filled a 75 GB disk) and/or drags one 8·numHashes-byte array per
-    // candidate through a shuffle (~77 GB at sf1-mutated). est is a
-    // pure function of the pair, so filtering band-duplicates before
-    // dedup returns the identical pair set. Past the broadcast bound
-    // (DISTINCT texts in the many millions) the dedup-first shuffle
-    // join remains — at that scale a deployment shards the candidate
-    // join by rep-id range so each block's sig slice broadcasts.
-    // NOTE both bounds here and below are raw PAYLOAD bytes; Spark
-    // materializes a broadcast deserialized on the driver and every
-    // executor with 2-4x object overhead, so the 1 GB / 2 GB constants
-    // assume ≥ ~8-16 GB driver/executor heaps (this rig runs 128 GB;
-    // a default 1 GB driver would OOM near the bound — size the
-    // constants to ~1/16 of the smallest heap when porting).
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    val sigsSmall = rs.nReps * numHashes * 8L <= (1L << 30)
-    def sigSide(idAs: String, sigAs: String) = {
-      val s = sigs.select(col("__id").as(idAs), col("minhash_sig").as(sigAs))
-      if (sigsSmall) broadcast(s) else s
-    }
-    def estFilter(pairs: DataFrame): DataFrame = pairs
-      .join(sigSide("id_a", "sig_a"), Seq("id_a"))
-      .join(sigSide("id_b", "sig_b"), Seq("id_b"))
-      .withColumn("est",
-        sigEqCount(col("sig_a"), col("sig_b")).cast("double") / numHashes)
-      .filter(col("est") >= estCutoff)
-      .select("id_a", "id_b")
     // Fused bucket-local candidate+est+verify (r17): when the rep
     // tables fit the documented broadcast bounds, the per-bucket pair
     // ENUMERATION, the signature-estimate prefilter and the exact
@@ -1025,22 +982,22 @@ object Dedup {
     // answer. Here the candidate stream never becomes rows: buckets
     // (≤ cap ids each, sorted) flatMap through an iterator that runs
     // the IDENTICAL est compare (same eq-count loop over the width
-    // prefix, same eq/width ≥ cutoff double compare) and the IDENTICAL
-    // two-pointer jaccard ([[jaccardOfSortedLongs]] arithmetic), so
+    // prefix, same eq/width ≥ cutoff double compare as [[verifyPairs]])
+    // and the IDENTICAL two-pointer jaccard ([[sortedJaccard]]), so
     // only verified pairs materialize; duplicates across bands (est
     // and jaccard are pure functions of the pair, so every bucket
     // emits the same verdict) collapse in a distinct over the VERIFIED
     // set instead of the candidate set. Pair set and every jaccard
-    // value are bit-identical to the join form; the shuffle cost drops
+    // value are bit-identical to [[verifyPairs]]; the shuffle cost drops
     // from O(capped candidates) to O(reps · bands + verified pairs).
-    val repPairs = (rs.lookup match {
+    val repPairs = rs.lookup match {
       case Some(bl) =>
         val width = numHashes
-        val cutoff = estCutoff
+        val cutoff = estCutoffOf(jaccardThreshold)
         val tau = jaccardThreshold
         // The mega-bucket cap rides the same aggregation: bucket size
         // IS the collected list's size, so the count-groupBy +
-        // semi-join of the classic shape (bucketSizes/banded) folds
+        // semi-join of the staged shape ([[capBands]]) folds
         // into one exchange. Each surviving bucket is then SPLIT into
         // chunks of ≲2¹⁷ pairs (outer index i strided by chunk count —
         // a disjoint exact partition of the i<j pair space) and the
@@ -1110,7 +1067,7 @@ object Dedup {
                     val b = asig(j)
                     if (b ne null) {
                       // est: the same eq/width >= cutoff predicate as
-                      // the classic estOk probe, decided via minEq with
+                      // the probe est of [[verifyPairs]], decided via minEq with
                       // early accept (eq can only grow) and early
                       // reject (eq + remaining < minEq can't recover)
                       val a = asig(i)
@@ -1137,7 +1094,7 @@ object Dedup {
                         val lmin = math.min(la, lb); val lmax = math.max(la, lb)
                         if (lmax == 0 || lmin.toDouble / lmax >= tau) {
                           // verify: same arithmetic as
-                          // [[jaccardOfSortedLongs]], with a guarded
+                          // [[sortedJaccard]], with a guarded
                           // abandon: once inter + min(remaining) sits a
                           // FULL UNIT below the real-algebra requirement
                           // tau*(la+lb)/(1+tau), the final fl compare
@@ -1178,26 +1135,16 @@ object Dedup {
             }
           }.toDF("id_a", "id_b", "jaccard")
           .dropDuplicates("id_a", "id_b")
-      case _ =>
+          .filter(col("jaccard") >= jaccardThreshold)
+          .select("id_a", "id_b", "jaccard")
+      case None =>
         // Staged tail, the path when the rep tables exceed the lookup
-        // bounds or the ids are not long: est via sig joins or
-        // broadcast-lookup-free staging, distinct over est survivors,
-        // then the shingle-array verify join.
-        val withSigs =
-          if (sigsSmall) estFilter(candRaw).dropDuplicates("id_a", "id_b")
-          else estFilter(candRaw.dropDuplicates("id_a", "id_b"))
-        val shingles = rs.perDoc.select(col("__id"), col("__sh"))
-        def shSide(idAs: String, shAs: String) = {
-          val s = shingles.select(col("__id").as(idAs), col("__sh").as(shAs))
-          if (rs.shingleBytes <= (2L << 30)) broadcast(s) else s
-        }
-        withSigs
-          .join(shSide("id_a", "sh_a"), Seq("id_a"))
-          .join(shSide("id_b", "sh_b"), Seq("id_b"))
-          .withColumn("jaccard", jaccardOfSortedLongs(col("sh_a"), col("sh_b")))
-    })
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
+        // bounds or the ids are not long: the capped bucket self-join
+        // emits candidate rows and the shared verify stages them.
+        val side = rs.side
+        verifyPairs(bucketPairs(capBands(banded0, maxBucketSize)), "id_a", "id_b",
+          side, side, numHashes, jaccardThreshold)
+    }
     // Emission fan-out of the identity collapse: cross-rep member pairs
     // inherit their representatives' exact jaccard (identical texts are
     // interchangeable), same-rep member pairs are jaccard-1.0 by
@@ -1260,7 +1207,9 @@ object Dedup {
 
   /** Verified near-dup pairs WITHIN one precomputed signature table —
     * banding, optional mega-bucket cap, signature-estimate prefilter,
-    * exact hashed-shingle verify; (id_a < id_b, jaccard). The sig/
+    * exact hashed-shingle verify ([[verifyPairs]]); (id_a < id_b,
+    * jaccard). Banding and estimate read only the first `numHashes`
+    * components, so a wider table gives the same pairs. The sig/
     * shingle columns are [[minHashSigTable]]'s. No identity collapse:
     * callers on duplicate-heavy corpora want [[minHashDupPairs]]; this
     * is the primitive for pipelines that already own a signature store.
@@ -1268,26 +1217,18 @@ object Dedup {
   def minHashPairsWithinSigs(sigs: DataFrame, idCol: String,
       numHashes: Int, bands: Int, jaccardThreshold: Double,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val banded0 = bandsOfSigs(sigs.select(col(idCol).as("__id"),
-      col("minhash_sig")), numHashes, bands)
-    val banded = cappedBands(banded0, maxBucketSize)
-    val cand = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
-      .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val sigTable = sigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles"))
-    verifySigCandidates(cand, "id_a", "id_b", sigTable, sigTable,
-      numHashes, jaccardThreshold)
+    val side = sigSideOf(sigs, idCol)
+    val cand = bucketPairs(capBands(bandsOfSigs(side.table, numHashes, bands),
+      maxBucketSize))
+    verifyPairs(cand, "id_a", "id_b", side, side, numHashes, jaccardThreshold)
   }
 
   /** Verified near-dup pairs BETWEEN a batch signature table and a
     * (typically persisted) index signature table — the steady-state
     * ingest join with zero re-hashing of index text. The candidate
     * keeps its (batch id, index id) orientation through estimation and
-    * verification — each side joins ONLY its own signature table, so an
-    * id that appears in both tables cannot fan the verify joins out or
+    * verification — each side reads ONLY its own signature table, so an
+    * id that appears in both tables cannot fan the verify out or
     * cross-match rows (it yields the well-defined batch-row × index-row
     * pair instead; self pairs with equal ids are dropped). Returns
     * (id_a, id_b, jaccard) with id_a < id_b, ONE row per unordered
@@ -1302,30 +1243,33 @@ object Dedup {
   def minHashPairsBetweenSigs(batchSigs: DataFrame, indexSigs: DataFrame,
       idCol: String, numHashes: Int, bands: Int, jaccardThreshold: Double,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val idxBanded = cappedBands(bandsOfSigs(
-      indexSigs.select(col(idCol).as("__id"), col("minhash_sig")),
-      numHashes, bands), maxBucketSize)
-    val batchBanded = bandsOfSigs(batchSigs.select(col(idCol).as("__id"),
-      col("minhash_sig")), numHashes, bands)
+    val batch = sigSideOf(batchSigs, idCol)
+    val index = sigSideOf(indexSigs, idCol)
+    val idxBanded = capBands(bandsOfSigs(index.table, numHashes, bands),
+      maxBucketSize)
+    val batchBanded = bandsOfSigs(batch.table, numHashes, bands)
     val cand = batchBanded.select(col("band"), col("band_hash"), col("__id").as("__bid"))
       .join(idxBanded.select(col("band"), col("band_hash"), col("__id").as("__iid")),
         Seq("band", "band_hash"))
       .filter(col("__bid") =!= col("__iid"))
       .select("__bid", "__iid")
-      .dropDuplicates("__bid", "__iid")
-    verifySigCandidates(cand, "__bid", "__iid",
-        batchSigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles")),
-        indexSigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles")),
-        numHashes, jaccardThreshold)
+    verifyPairs(cand, "__bid", "__iid", batch, index, numHashes,
+        jaccardThreshold)
       .select(least(col("__bid"), col("__iid")).as("id_a"),
         greatest(col("__bid"), col("__iid")).as("id_b"), col("jaccard"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("jaccard")).as("jaccard"))
   }
 
+  /** The one LSH banding of the MinHash family: (__id, band, band_hash)
+    * rows of an (__id, minhash_sig) frame, one per band of the first
+    * `numHashes` signature components, the band key being the xxhash64
+    * of the band slice's string form (the DuckDB oracles replay bucket
+    * MEMBERSHIP, which the hash preserves). */
   private def bandsOfSigs(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes")
+      s"bands=$bands must divide numHashes=$numHashes — a remainder would " +
+      "silently drop trailing signature components and lower recall")
     val rowsPerBand = numHashes / bands
     sigs.select(col("__id"),
       posexplode(array((0 until bands).map { b =>
@@ -1334,138 +1278,165 @@ object Dedup {
       }: _*)).as(Seq("band", "band_hash")))
   }
 
-  /** Mega-bucket cap over a banded frame; Int.MaxValue skips the
-    * histogram pass entirely (capless mode pays no extra shuffle). */
-  private def cappedBands(banded0: DataFrame, maxBucketSize: Int): DataFrame =
-    if (maxBucketSize == Int.MaxValue) banded0
-    else {
-      val ok = banded0.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucketSize)
-        .drop("__n")
-      banded0.join(ok, Seq("band", "band_hash"), "left_semi")
+  /** Raw (id_a < id_b) candidate pairs of a banded frame's bucket
+    * self-join, one row per shared bucket (the verify dedups). */
+  private def bucketPairs(banded: DataFrame): DataFrame =
+    banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
+      .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
+        Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+
+  /** (band, band_hash, __n) ids per bucket of a banded frame — the one
+    * count aggregation behind the size histograms and [[capBands]]. */
+  private def bucketSizes(banded: DataFrame): DataFrame =
+    banded.groupBy(col("band"), col("band_hash")).agg(count(lit(1)).as("__n"))
+
+  /** The one mega-bucket cap: the rows of a banded frame whose bucket
+    * holds at most `cap` ids, by a semi-join against the cap-surviving
+    * [[bucketSizes]]. A caller that keeps the size frame for more (the
+    * against-index mass histogram) passes it as `sizes`; without it,
+    * `Int.MaxValue` skips the aggregation (capless mode pays no extra
+    * shuffle). The fused bucket loop of [[pairsFromRepSpace]] caps on
+    * its collected bucket lists instead, in the same exchange. */
+  private def capBands(banded: DataFrame, cap: Int,
+      sizes: Option[DataFrame] = None): DataFrame =
+    if (cap == Int.MaxValue && sizes.isEmpty) banded
+    else banded.join(
+      sizes.getOrElse(bucketSizes(banded)).filter(col("__n") <= cap)
+        .select(col("band"), col("band_hash")),
+      Seq("band", "band_hash"), "left_semi")
+
+  /** Estimate prefilter cutoff of every MinHash verify — slightly
+    * permissive vs the exact threshold so borderline true pairs survive
+    * to verification. The DuckDB oracles inline the same τ − 0.25. */
+  private def estCutoffOf(jaccardThreshold: Double): Double =
+    math.max(0.0, jaccardThreshold - 0.25)
+
+  /** Equal components among the first `width` positions of two
+    * signatures (fewer when either is shorter) — the one estimate
+    * count of both verify forms. */
+  private def prefixEq(a: Array[Long], b: Array[Long], width: Int): Int = {
+    var i = 0
+    var eq = 0
+    val n = math.min(width, math.min(a.length, b.length))
+    while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
+    eq
+  }
+
+  /** [[prefixEq]] over two (already prefix-sliced) signature columns,
+    * fused (zip_with/filter/size run interpreted per element; at tens
+    * of millions of candidates the Column form dominated the whole pair
+    * join). Null-safe: a null side counts 0, which never passes a
+    * positive cutoff. */
+  private val sigEqCount: org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (a: Array[Long], b: Array[Long]) =>
+      if (a == null || b == null) 0 else prefixEq(a, b, Int.MaxValue)
     }
 
-  /** Optional driver-built lookup over an (__id, minhash_sig, shingles)
-    * signature table — the [[RepSpace.lookup]] discipline for callers
-    * that own a sig table instead of a rep space. Bounds and payload
-    * are identical (1 GiB sigs / 2 GiB shingles, long ids); one
-    * column-pruned stats aggregate decides, so the corpus-sized regime
-    * pays one cheap pass and keeps the join staging. */
-  /** Memoized per input plan (r16): within-corpus + cross-index calls
+  /** Measured payload and [[lookupOf]] broadcast of a signature table,
+    * memoized per input plan (r16): within-corpus + cross-index calls
     * over the same batch frame (the e2e drop shape — within pairs, then
     * batch×index pairs) otherwise re-ran the stats aggregate and the
     * collect per call. planKey folds file mtimes, so a rewritten
     * scratch table mints a fresh entry. */
   private val sigLookupMemo = new graft.core.BoundedMemo[String,
-    Option[org.apache.spark.broadcast.Broadcast[RepLookup]]](32)
-  private def sigTableLookup(sigs: DataFrame)
-      : Option[org.apache.spark.broadcast.Broadcast[RepLookup]] =
-    sigLookupMemo.getOrElseUpdate(graft.core.Scratch.planKey(sigs),
-      sigTableLookupBuild(sigs))
+    (Long, Long, Option[org.apache.spark.broadcast.Broadcast[RepLookup]])](32)
 
-  private def sigTableLookupBuild(sigs: DataFrame)
-      : Option[org.apache.spark.broadcast.Broadcast[RepLookup]] = {
-    if (sigs.schema("__id").dataType !=
-        org.apache.spark.sql.types.LongType) return None
-    val st = sigs.agg(count(lit(1)),
-      sum(size(col("minhash_sig"))), sum(size(col("shingles")))).head()
-    val sigB = (if (st.isNullAt(1)) 0L else st.getLong(1)) * 8L
-    val shB = (if (st.isNullAt(2)) 0L else st.getLong(2)) * 8L
-    if (sigB > (1L << 30) || shB > (2L << 30)) None
-    else {
-      val rows = sigs.select(col("__id"), col("minhash_sig"), col("shingles"))
-        .collect()
-      java.util.Arrays.sort(rows,
-        java.util.Comparator.comparingLong(
-          (r: org.apache.spark.sql.Row) => r.getLong(0)))
-      val n = rows.length
-      val ids = new Array[Long](n)
-      val sg = new Array[Array[Long]](n)
-      val sh = new Array[Array[Long]](n)
-      var i = 0
-      while (i < n) {
-        val r = rows(i)
-        ids(i) = r.getLong(0)
-        sg(i) = r.getSeq[Long](1).toArray
-        sh(i) = r.getSeq[Long](2).toArray
-        i += 1
-      }
-      Some(sigs.sparkSession.sparkContext.broadcast(new RepLookup(ids, sg, sh)))
-    }
+  /** A [[minHashSigTable]]-shaped (idCol, minhash_sig, shingles) table
+    * as one side of [[verifyPairs]]: one column-pruned stats aggregate
+    * measures it, and [[lookupOf]] broadcasts it when it fits. */
+  private def sigSideOf(sigs: DataFrame, idCol: String): VerifySide = {
+    val table = sigs.select(col(idCol).as("__id"), col("minhash_sig"),
+      col("shingles").as("__sh"))
+    val (rows, shBytes, lookup) = sigLookupMemo.getOrElseUpdate(
+      graft.core.Scratch.planKey(table), {
+        val st = table.agg(count(lit(1)),
+          sum(size(col("minhash_sig"))), sum(size(col("__sh")))).head()
+        val sigB = (if (st.isNullAt(1)) 0L else st.getLong(1)) * 8L
+        val shB = (if (st.isNullAt(2)) 0L else st.getLong(2)) * 8L
+        (st.getLong(0), shB, lookupOf(table, sigB, shB))
+      })
+    VerifySide(table, rows, shBytes, lookup)
   }
 
-  /** Shared est-prefilter + exact-verify tail over candidate id pairs —
-    * staged like [[pairsFromRepSpace]]: when both signature tables fit
-    * the broadcast-lookup bounds the candidate stream stays 16
-    * bytes/row and the arrays are probed inside the UDFs (bit-identical
-    * arithmetic); otherwise the estimate pass joins SIGNATURES only
-    * (16·numHashes bytes/row) and shingle arrays move only for the
-    * verified tail. Each candidate side uses its OWN signature table
-    * (`sigsA` for `aCol`, `sigsB` for `bCol`) so two-table callers
-    * stay well-defined even when an id appears in both tables;
-    * single-table callers pass the same frame twice. */
-  private def verifySigCandidates(cand: DataFrame, aCol: String, bCol: String,
-      sigsA: DataFrame, sigsB: DataFrame,
-      numHashes: Int, jaccardThreshold: Double): DataFrame = {
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    val la = sigTableLookup(sigsA)
-    val lb = if (sigsA eq sigsB) la else sigTableLookup(sigsB)
-    (la, lb) match {
-      case (Some(ba), Some(bb)) =>
+  /** The one MinHash pair verify: estimate prefilter over the
+    * `numHashes` signature prefix (eq / numHashes ≥ τ − 0.25), pair
+    * dedup, exact hashed-shingle Jaccard ≥ τ, over raw candidate
+    * (`aCol`, `bCol`) pairs that may repeat across bands. Side `a`
+    * supplies the `aCol` ids and side `b` the `bCol` ids — each side
+    * reads only its own table, so two-table callers stay well-defined
+    * when an id appears in both; single-table callers pass one side
+    * twice. Returns (aCol, bCol, jaccard), one row per verified pair.
+    *
+    *  - '''Probe form''' (both sides have a lookup): the candidate
+    *    stream stays 16 bytes/row and est and verify probe the
+    *    broadcast arrays from inside two UDFs.
+    *  - '''Staged form''': est joins the signature prefixes, verify
+    *    joins the shingle sets. Each side's join follows one rule on
+    *    its measured payload: broadcast it when it fits the lookup
+    *    bound (1 GiB of prefixes, 2 GiB of shingles), otherwise hint
+    *    SHUFFLE_HASH — a sort-merge join would sort gigabytes of arrays
+    *    per candidate (the sf10-mutated disk fill), where a hash join
+    *    moves each side once and streams the probe.
+    *
+    * Dedup order: when both signature sides are map-side (lookups, or
+    * broadcast prefixes), est filters the raw band-duplicated candidates
+    * and only the survivors are deduplicated — dedup first would sort
+    * the FULL candidate mass (a 476 M-row sort at sf10-mutated filled a
+    * 75 GB disk). est is a pure function of the pair, so both orders
+    * return the same set. Otherwise the candidates are deduplicated
+    * before the shuffled est join. Both forms compute the same est and
+    * the same jaccard bits.
+    */
+  private def verifyPairs(cand: DataFrame, aCol: String, bCol: String,
+      a: VerifySide, b: VerifySide, numHashes: Int,
+      jaccardThreshold: Double): DataFrame = {
+    val cutoff = estCutoffOf(jaccardThreshold)
+    val scored = (a.lookup, b.lookup) match {
+      case (Some(la), Some(lb)) =>
         val width = numHashes
-        val cutoff = estCutoff
         val estOk = udf { (ia: Long, ib: Long) =>
-          val a0 = ba.value; val b0 = bb.value
-          val x = a0.idx(ia); val y = b0.idx(ib)
-          x >= 0 && y >= 0 && {
-            val a = a0.sigs(x); val b = b0.sigs(y)
-            var i = 0
-            var eq = 0
-            val n = math.min(width, math.min(a.length, b.length))
-            while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-            eq.toDouble / width >= cutoff
-          }
+          val l = la.value; val r = lb.value
+          val x = l.idx(ia); val y = r.idx(ib)
+          x >= 0 && y >= 0 &&
+            prefixEq(l.sigs(x), r.sigs(y), width).toDouble / width >= cutoff
         }
         val jac = udf { (ia: Long, ib: Long) =>
-          val a0 = ba.value; val b0 = bb.value
-          val x = a0.idx(ia); val y = b0.idx(ib)
-          if (x < 0 || y < 0) 0.0
-          else {
-            val a = a0.shs(x); val b = b0.shs(y)
-            if (a.isEmpty && b.isEmpty) 0.0
-            else {
-              var i = 0; var j = 0; var inter = 0
-              while (i < a.length && j < b.length) {
-                val u = a(i); val v = b(j)
-                if (u == v) { inter += 1; i += 1; j += 1 }
-                else if (u < v) i += 1
-                else j += 1
-              }
-              val union = a.length + b.length - inter
-              if (union == 0) 0.0 else inter.toDouble / union
-            }
-          }
+          val l = la.value; val r = lb.value
+          val x = l.idx(ia); val y = r.idx(ib)
+          if (x < 0 || y < 0) 0.0 else sortedJaccard(l.shs(x), r.shs(y))
         }
         cand.filter(estOk(col(aCol), col(bCol)))
+          .dropDuplicates(aCol, bCol)
           .withColumn("jaccard", jac(col(aCol), col(bCol)))
-          .filter(col("jaccard") >= jaccardThreshold)
-          .select(col(aCol), col(bCol), col("jaccard"))
       case _ =>
-        val est = cand
-          .join(sigsA.select(col("__id").as(aCol), col("minhash_sig").as("__siga")), Seq(aCol))
-          .join(sigsB.select(col("__id").as(bCol), col("minhash_sig").as("__sigb")), Seq(bCol))
+        def staged(side: DataFrame, fits: Boolean) =
+          if (fits) broadcast(side) else side.hint("SHUFFLE_HASH")
+        def sigsFit(s: VerifySide) = s.rows * numHashes * 8L <= (1L << 30)
+        def sigOf(s: VerifySide, id: String, as: String) = staged(
+          s.table.select(col("__id").as(id),
+            slice(col("minhash_sig"), 1, numHashes).as(as)), sigsFit(s))
+        def shOf(s: VerifySide, id: String, as: String) = staged(
+          s.table.select(col("__id").as(id), col("__sh").as(as)),
+          s.shingleBytes <= (2L << 30))
+        def est(pairs: DataFrame) = pairs
+          .join(sigOf(a, aCol, "__siga"), Seq(aCol))
+          .join(sigOf(b, bCol, "__sigb"), Seq(bCol))
           .withColumn("est",
             sigEqCount(col("__siga"), col("__sigb")).cast("double") / numHashes)
-          .filter(col("est") >= estCutoff)
+          .filter(col("est") >= cutoff)
           .select(aCol, bCol)
-        est
-          .join(sigsA.select(col("__id").as(aCol), col("shingles").as("__sha")), Seq(aCol))
-          .join(sigsB.select(col("__id").as(bCol), col("shingles").as("__shb")), Seq(bCol))
+        val survivors =
+          if (sigsFit(a) && sigsFit(b)) est(cand).dropDuplicates(aCol, bCol)
+          else est(cand.dropDuplicates(aCol, bCol))
+        survivors
+          .join(shOf(a, aCol, "__sha"), Seq(aCol))
+          .join(shOf(b, bCol, "__shb"), Seq(bCol))
           .withColumn("jaccard", jaccardOfSortedLongs(col("__sha"), col("__shb")))
-          .filter(col("jaccard") >= jaccardThreshold)
-          .select(col(aCol), col(bCol), col("jaccard"))
     }
+    scored.filter(col("jaccard") >= jaccardThreshold)
+      .select(col(aCol), col(bCol), col("jaccard"))
   }
 
   /** [[minHashDupAgainstIndex]] at the DERIVED operating point — the
@@ -1522,13 +1493,10 @@ object Dedup {
       shingleLen: Int, numHashes: Int, bands: Int,
       jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)],
       budgetPairsPerBatchRep: Option[Long] = None): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes")
     require(jaccardThreshold > 0,
       "threshold must be positive — identical batch/index texts emit " +
       "unconditionally at jaccard 1.0, which matches the uncollapsed " +
       "semantics only for τ > 0")
-    val rowsPerBand = numHashes / bands
     // r16: both sides run the SHARED identity collapse + fused signature
     // pass ([[collapseToReps]] — scratch-parquet-backed, session-
     // memoized). The index side of a steady-state ingest IS the corpus
@@ -1546,35 +1514,26 @@ object Dedup {
     val samePairs = bMem.select(col("__k"), col("__id").as("new_id"))
       .join(iMem.select(col("__k"), col("__id").as("index_id")), Seq("__k"))
       .select(col("new_id"), col("index_id"), lit(1.0).as("jaccard"))
-    // prefix-slice each side's (possibly wider) memoized signature
-    def perDocOf(rs: RepSpace) = rs.perDoc
-      .select(col("__id"), col("__k"),
-        slice(col("minhash_sig"), 1, numHashes).as("sig"), col("__sh"))
-    def bandedOf(sigs: DataFrame) = sigs.select(col("__id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-          .cast("array<string>").cast("string"))
-      }: _*)).as(Seq("band", "band_hash")))
-    val idxDoc = perDocOf(iRs)
-    val newDoc = perDocOf(bRs)
-    val idxBand0 = bandedOf(idxDoc.select(col("__id"), col("sig")))
+    // band the prefix slice of each side's (possibly wider) memoized
+    // signature
+    def bandedOf(rs: RepSpace) = bandsOfSigs(rs.perDoc.select(col("__id"),
+      slice(col("minhash_sig"), 1, numHashes).as("minhash_sig")), numHashes, bands)
+    val idxBand0 = bandedOf(iRs)
     // r16: the index-side bucket histogram is a pure function of the
     // rep space and the band shape — callers that differ only in the
     // BUDGET applied to it (dd_incremental_index vs _budget run the
     // same corpus at budget 1024 vs 4) re-ran the full banding
     // aggregation to re-derive the same model-sized array. Session-
-    // memoized like the rep spaces themselves.
-    val idxHist = bandHistOf(iRs, numHashes, bands)
+    // memoized like the rep spaces themselves; only the derived cap
+    // reads it.
     val gapCap = capSpec match {
       case Left(fixed) => fixed
       case Right((minOutlier, gapRatio)) =>
-        autoBucketCapFromHist(idxHist, minOutlier, gapRatio)
+        autoBucketCapFromHist(bandHistOf(iRs, numHashes, bands),
+          minOutlier, gapRatio)
     }
-    val bucketN = idxBand0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= gapCap)
-      .persist()
-    val newBand = bandedOf(newDoc.select(col("__id"), col("sig")))
+    val bucketN = bucketSizes(idxBand0).filter(col("__n") <= gapCap).persist()
+    val newBand = bandedOf(bRs)
     // Budget-derived cap refinement (r16, found by the sf10m run that
     // filled the disk): on a knee-less bucket histogram the gap rule
     // degenerates to cap = max bucket size, and the batch×index join's
@@ -1586,7 +1545,6 @@ object Dedup {
     // ≤ budget × batchReps BY CONSTRUCTION, the incremental twin of
     // minHashDupPairsBudgeted's tier-3 rule (floor 1: identical texts
     // still pair unconditionally below).
-    val nBatchReps = bRs.nReps
     val maxBucketSize = budgetPairsPerBatchRep match {
       case None => gapCap
       case Some(budget) =>
@@ -1600,99 +1558,23 @@ object Dedup {
             .join(bucketN, Seq("band", "band_hash"))
             .groupBy(col("__n")).agg(count(lit(1)).as("__m"))))
         math.min(gapCap.toLong,
-          budgetCapFromMassHist(hits, budget * nBatchReps).toLong).toInt
+          budgetCapFromMassHist(hits, budget * bRs.nReps).toLong).toInt
     }
-    val okBuckets = bucketN.filter(col("__n") <= maxBucketSize)
-      .drop("__n")
-    val idxBand = idxBand0.join(okBuckets, Seq("band", "band_hash"), "left_semi")
-    // same-text rep pairs are spoken for (emitted above at 1.0): drop
-    // them by anti-joining the (model-sized) identical-key rep pairs
-    // instead of dragging 32-byte identity keys through the candidate
-    // stream
-    val sameRepPairs = bRs.perDoc.select(col("__k"), col("__id").as("new_rid"))
-      .join(iRs.perDoc.select(col("__k"), col("__id").as("index_rid")), Seq("__k"))
-      .select("new_rid", "index_rid")
+    val idxBand = capBands(idxBand0, maxBucketSize, Some(bucketN))
     val cand = newBand.select(col("band"), col("band_hash"), col("__id").as("new_rid"))
       .join(idxBand.select(col("band"), col("band_hash"), col("__id").as("index_rid")),
         Seq("band", "band_hash"))
       .select("new_rid", "index_rid")
-      .dropDuplicates("new_rid", "index_rid")
+    // same-text rep pairs are spoken for (emitted above at 1.0): drop
+    // them from the verified rep pairs by anti-joining the (model-sized)
+    // identical-key rep pairs instead of dragging 32-byte identity keys
+    // through the candidate stream
+    val sameRepPairs = bRs.perDoc.select(col("__k"), col("__id").as("new_rid"))
+      .join(iRs.perDoc.select(col("__k"), col("__id").as("index_rid")), Seq("__k"))
+      .select("new_rid", "index_rid")
+    val repPairs = verifyPairs(cand, "new_rid", "index_rid", bRs.side,
+        iRs.side, numHashes, jaccardThreshold)
       .join(sameRepPairs, Seq("new_rid", "index_rid"), "left_anti")
-    // est/verify staging (r16 — the sf10m disk-fill's second half): the
-    // batch side is model-sized by definition, so BROADCAST it under
-    // the same 1 GiB payload bound as the within-corpus path; the index
-    // side's array payload is corpus-sized, so force a SHUFFLE_HASH
-    // join — a sort-merge join would sort gigabytes of sig/shingle
-    // ARRAYS per candidate (the measured failure), where a hash join
-    // moves each side exactly once and streams the probe.
-    val batchSmall = nBatchReps * numHashes * 8L <= (1L << 30)
-    def newSide(c1: String, as1: String) = {
-      val s = newDoc.select(col("__id").as("new_rid"), col(c1).as(as1))
-      if (batchSmall) broadcast(s) else s.hint("SHUFFLE_HASH")
-    }
-    def idxSide(c1: String, as1: String) =
-      idxDoc.select(col("__id").as("index_rid"), col(c1).as(as1))
-        .hint("SHUFFLE_HASH")
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    // Candidate-local est + verify when BOTH sides' rep tables fit the
-    // documented broadcast bounds (same rule and same arithmetic as the
-    // within-corpus [[pairsFromRepSpace]] fast path): the candidate
-    // stream stays 16 bytes/row and the arrays are probed from the two
-    // shared lookups instead of materialized per candidate through four
-    // joins. Past the bounds (the sf10m regime) the broadcast/
-    // SHUFFLE_HASH staging below remains — nothing wide is ever sorted.
-    val repPairs = ((iRs.lookup, bRs.lookup) match {
-      case (Some(il), Some(bl)) =>
-        val width = numHashes
-        val cutoff = estCutoff
-        val estOk = udf { (ib: Long, ii: Long) =>
-          val lb = bl.value; val li = il.value
-          val x = lb.idx(ib); val y = li.idx(ii)
-          x >= 0 && y >= 0 && {
-            val a = lb.sigs(x); val b = li.sigs(y)
-            var i = 0
-            var eq = 0
-            val n = math.min(width, math.min(a.length, b.length))
-            while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-            eq.toDouble / width >= cutoff
-          }
-        }
-        val jac = udf { (ib: Long, ii: Long) =>
-          val lb = bl.value; val li = il.value
-          val x = lb.idx(ib); val y = li.idx(ii)
-          if (x < 0 || y < 0) 0.0
-          else {
-            val a = lb.shs(x); val b = li.shs(y)
-            if (a.isEmpty && b.isEmpty) 0.0
-            else {
-              var i = 0; var j = 0; var inter = 0
-              while (i < a.length && j < b.length) {
-                val u = a(i); val v = b(j)
-                if (u == v) { inter += 1; i += 1; j += 1 }
-                else if (u < v) i += 1
-                else j += 1
-              }
-              val union = a.length + b.length - inter
-              if (union == 0) 0.0 else inter.toDouble / union
-            }
-          }
-        }
-        cand.filter(estOk(col("new_rid"), col("index_rid")))
-          .withColumn("jaccard", jac(col("new_rid"), col("index_rid")))
-      case _ =>
-        cand
-          .join(newSide("sig", "sig_n"), Seq("new_rid"))
-          .join(idxSide("sig", "sig_i"), Seq("index_rid"))
-          .withColumn("est",
-            sigEqCount(col("sig_n"), col("sig_i")).cast("double") / numHashes)
-          .filter(col("est") >= estCutoff)
-          .select("new_rid", "index_rid")
-          .join(newSide("__sh", "sh_n"), Seq("new_rid"))
-          .join(idxSide("__sh", "sh_i"), Seq("index_rid"))
-          .withColumn("jaccard", jaccardOfSortedLongs(col("sh_n"), col("sh_i")))
-    })
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("new_rid", "index_rid", "jaccard")
     // emission fan-out: cross-rep member pairs inherit their reps' exact
     // jaccard (identical texts are interchangeable)
     val crossPairs = repPairs

@@ -292,6 +292,173 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         s"diff=${(fused diff staged) ++ (staged diff fused)}")
   }
 
+  /** Collected rows of a [[Dedup.minHashSigTable]]: (id, sig, shingles). */
+  private type SigRow = (Long, Array[Long], Array[Long])
+
+  private def sigRows(sigs: org.apache.spark.sql.DataFrame): Seq[SigRow] =
+    sigs.collect().toSeq.map(r => (r.getAs[Number](0).longValue,
+      r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
+
+  private def pairBits(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
+
+  /** Set equality that reports only the differing pairs. */
+  private def assertSamePairs(label: String, got: Set[(Long, Long, Long)],
+      want: Set[(Long, Long, Long)]): Unit = {
+    assert(want.nonEmpty, s"$label: no pair expected")
+    val diff = (got diff want) ++ (want diff got)
+    if (diff.nonEmpty)
+      fail(s"$label: got ${got.size}, want ${want.size}, differing $diff")
+  }
+
+  private def eqCount(a: Array[Long], b: Array[Long], n: Int): Int =
+    (0 until n).count(k => a(k) == b(k))
+
+  private def setJaccard(a: Array[Long], b: Array[Long]): Double = {
+    val inter = (a.toSet & b.toSet).size
+    inter.toDouble / (a.length + b.length - inter)
+  }
+
+  /** Plain-Scala reference of minHashPairsWithinSigs (`batch` None) and
+    * minHashPairsBetweenSigs: a pair is expected when it shares a band
+    * of the first `numHashes` components whose index-side bucket holds
+    * at most `cap` ids, its est over that prefix is ≥ τ − 0.25, and its
+    * jaccard is ≥ τ. Between pairs keep the max jaccard per unordered
+    * pair. Band keys are the slices themselves, not their hash. */
+  private def bruteSigPairs(index: Seq[SigRow], batch: Option[Seq[SigRow]],
+      numHashes: Int, bands: Int, tau: Double,
+      cap: Int = Int.MaxValue): Set[(Long, Long, Long)] = {
+    val r = numHashes / bands
+    def keys(s: SigRow) =
+      (0 until bands).map(k => (k, s._2.slice(k * r, k * r + r).toSeq)).toSet
+    val sizes = index.flatMap(keys).groupBy(identity).map { case (k, v) => k -> v.size }
+    val idx = index.map(s => s -> keys(s).filter(sizes(_) <= cap))
+    val left = batch.fold(idx)(_.map(s => s -> keys(s)))
+    val cutoff = math.max(0.0, tau - 0.25)
+    val hits = for {
+      (x, kx) <- left
+      (y, ky) <- idx
+      if (if (batch.isEmpty) x._1 < y._1 else x._1 != y._1) && (kx & ky).nonEmpty
+      if eqCount(x._2, y._2, numHashes).toDouble / numHashes >= cutoff
+      j = setJaccard(x._3, y._3) if j >= tau
+    } yield (math.min(x._1, y._1), math.max(x._1, y._1), j)
+    hits.groupBy(h => (h._1, h._2)).map { case ((a, b), v) =>
+      (a, b, java.lang.Double.doubleToLongBits(v.map(_._3).max)) }.toSet
+  }
+
+  test("MinHash pair operators: lookup and staged verify agree; sig-table pairs equal brute force") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight to sleep"
+    val words = base.split(" ")
+    val mutated = (0 until 8).map { k =>
+      words.zipWithIndex.map { case (w, i) =>
+        if (i % 8 < k) s"mut$k$i" else w }.mkString(" ")
+    }
+    val noise = (30L to 60L).map(i =>
+      (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j"))
+    val corpus = (1L to 5L).map(i => (i, base)) ++
+      mutated.zipWithIndex.map { case (t, k) => (10L + k, t) } ++ noise
+    // the index holds base copies, the even mutants and the low noise; the
+    // batch holds the other copies and mutants, fresh noise, and a noise
+    // near-dup of an index doc
+    val (idxRows, batchRows0) = corpus.partition { case (i, _) =>
+      i <= 3L || (i >= 10L && i < 18L && i % 2 == 0) || (i >= 30L && i < 45L) }
+    val batchRows = batchRows0 :+ ((99L, noise.head._2.replace("kh30j", "kh99j")))
+    // Long ids take the broadcast lookups (fused tail / probe verify); the
+    // same rows keyed by Int ids have none and run the staged verify.
+    def keyed(rows: Seq[(Long, String)], long: Boolean) =
+      if (long) rows.toDF("doc_id", "text")
+      else rows.map { case (i, t) => (i.toInt, t) }.toDF("doc_id", "text")
+    def both(label: String)(run: Boolean => org.apache.spark.sql.DataFrame) = {
+      val l = pairBits(run(true))
+      assertSamePairs(s"$label int vs long ids", pairBits(run(false)), l)
+      l
+    }
+    both("minHashDupPairs") { long =>
+      Dedup.minHashDupPairs(keyed(corpus, long), "doc_id", "text",
+        shingleLen = 3, numHashes = 16, bands = 8, jaccardThreshold = 0.35,
+        maxBucketSize = 50)
+    }
+    both("minHashDupAgainstIndex") { long =>
+      Dedup.minHashDupAgainstIndex(keyed(idxRows, long), keyed(batchRows, long),
+        "doc_id", "text", shingleLen = 3, numHashes = 16, bands = 8,
+        jaccardThreshold = 0.35, maxBucketSize = 50)
+    }
+    both("minHashDupAgainstIndexAuto") { long =>
+      Dedup.minHashDupAgainstIndexAuto(keyed(idxRows, long), keyed(batchRows, long),
+        "doc_id", "text", shingleLen = 3, jaccardThreshold = 0.5)
+    }
+    def sigs(rows: Seq[(Long, String)], long: Boolean) =
+      Dedup.minHashSigTable(keyed(rows, long), "doc_id", "text", 3, 16)
+    val corpusSigs = sigRows(sigs(corpus, long = true))
+    // cap 3 drops every bucket of the five verbatim copies
+    for (cap <- Seq(Int.MaxValue, 3)) {
+      val got = both(s"minHashPairsWithinSigs cap=$cap") { long =>
+        Dedup.minHashPairsWithinSigs(sigs(corpus, long), "doc_id",
+          numHashes = 16, bands = 8, jaccardThreshold = 0.35, maxBucketSize = cap)
+      }
+      assertSamePairs(s"within cap=$cap vs brute force", got,
+        bruteSigPairs(corpusSigs, None, 16, 8, 0.35, cap))
+    }
+    val got = both("minHashPairsBetweenSigs") { long =>
+      Dedup.minHashPairsBetweenSigs(sigs(batchRows, long), sigs(idxRows, long),
+        "doc_id", numHashes = 16, bands = 8, jaccardThreshold = 0.35)
+    }
+    assertSamePairs("between vs brute force", got,
+      bruteSigPairs(sigRows(sigs(idxRows, long = true)),
+        Some(sigRows(sigs(batchRows, long = true))), 16, 8, 0.35))
+  }
+
+  test("sig-table verify estimates over the numHashes prefix of a wider signature") {
+    import spark.implicits._
+    // 100 random 60-word bases, each with four mutants that replace 7
+    // non-adjacent words: jaccard ≈ 0.71 against the base, just above
+    // τ = 0.7, so the 16-component est often lands on either side of the
+    // cutoff τ − 0.25 while the 32-wide table's extra components would
+    // push an eq/16 count over it.
+    val rnd = new scala.util.Random(7)
+    def word() = Seq.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString
+    val bases = (1 to 100).map(i => (i * 10L, Array.fill(60)(word())))
+    val mutants = bases.flatMap { case (id, ws) =>
+      (1 to 4).map { m =>
+        val at = rnd.shuffle((0 until 30).map(_ * 2)).take(7).toSet
+        (id + m, ws.indices.map(i => if (at(i)) word() else ws(i)).mkString(" "))
+      }
+    }
+    val baseRows = bases.map { case (id, ws) => (id, ws.mkString(" ")) }
+    val tau = 0.7
+    def sigs(rows: Seq[(Long, String)], long: Boolean) = Dedup.minHashSigTable(
+      if (long) rows.toDF("doc_id", "text")
+      else rows.map { case (i, t) => (i.toInt, t) }.toDF("doc_id", "text"),
+      "doc_id", "text", 5, 32)
+    val all = sigRows(sigs(baseRows ++ mutants, long = true))
+    // the corpus must hold a pair the full-width count would pass: it
+    // shares a prefix band and verifies, its prefix est is under the
+    // cutoff, yet eq over all 32 components / 16 reaches it
+    val cutoff = tau - 0.25
+    val drift = for {
+      x <- all; y <- all if x._1 < y._1
+      e16 = eqCount(x._2, y._2, 16) if e16 > 0 && e16.toDouble / 16 < cutoff
+      if eqCount(x._2, y._2, 32).toDouble / 16 >= cutoff
+      if setJaccard(x._3, y._3) >= tau
+    } yield (x._1, y._1)
+    assert(drift.nonEmpty, "corpus plants no pair on the estimate-width edge")
+    def within(long: Boolean) = pairBits(Dedup.minHashPairsWithinSigs(
+      sigs(baseRows ++ mutants, long), "doc_id", numHashes = 16, bands = 16,
+      jaccardThreshold = tau))
+    val want = bruteSigPairs(all, None, 16, 16, tau)
+    assertSamePairs("within, long ids", within(true), want)
+    assertSamePairs("within, int ids", within(false), want)
+    def between(long: Boolean) = pairBits(Dedup.minHashPairsBetweenSigs(
+      sigs(mutants, long), sigs(baseRows, long), "doc_id", numHashes = 16,
+      bands = 16, jaccardThreshold = tau))
+    val wantB = bruteSigPairs(sigRows(sigs(baseRows, long = true)),
+      Some(sigRows(sigs(mutants, long = true))), 16, 16, tau)
+    assertSamePairs("between, long ids", between(true), wantB)
+    assertSamePairs("between, int ids", between(false), wantB)
+  }
+
   test("PPJoin and containment pairs are bit-identical to a brute-force reference") {
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi rho sigma"
